@@ -39,10 +39,6 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
        synthesized page corpus, load it once, then measure per-query
        warm latency (p50/p90 ms) through the full search lifecycle
        (SPARK_GRAFT_SERVE_QUERIES queries, default 32),
-     SPARK_GRAFT_BENCH_MODE=cuckoo_rehearsal + SPARK_GRAFT_DELTA:
-       cuckoo-vs-Bloom seen-accelerator comparison on one standing
-       state and one link batch (probe times, agreement, and the
-       TTL delete only the cuckoo table supports),
      SPARK_GRAFT_BENCH_MODE=delta_rehearsal + SPARK_GRAFT_DELTA:
        O(delta) evidence mode — fixed-size link delta against a
        standing seen-state of SPARK_GRAFT_FRONTIER keys, probe /
@@ -537,120 +533,6 @@ def bench_delta_rehearsal(
         "phases": phases,
         "frontier_sched_sec": round(total, 3),
         "urls_scheduled_per_sec": round(n_new / total, 1),
-    }
-
-
-def bench_cuckoo_rehearsal(
-    spark: SparkSession, n: int, delta: int, cpus: int
-) -> dict:
-    """Cuckoo-vs-Bloom seen-accelerator comparison (operators/cuckoo
-    vs operators/seen) on the SAME standing state and the SAME link
-    batch: n standing keys, a fixed ``delta``-row 7:5 fresh:dupe
-    batch, both anti-join compositions timed, plus the maintenance op
-    only the cuckoo table supports — deleting a TTL-expired key slice
-    (the Bloom path's equivalent is a full filter rebuild, priced
-    here as its measured build time). Both accelerators must return
-    the exact anti-join's row count (no false negatives) — recorded
-    as agree=true."""
-    import math as _math
-
-    from pyspark.storagelevel import StorageLevel
-
-    from web_crawler_search_engine_spark.operators import cuckoo as ck
-    from web_crawler_search_engine_spark.operators import seen as seen_ops
-
-    hosts = max(int(n ** 0.5) // 4, 16)
-    n_parents = 4896
-    seen = (
-        synth_frontier(spark, n, hosts, "seenset")
-        .select("url_key")
-        .persist(StorageLevel.MEMORY_ONLY)
-    )
-    phases: dict[str, float] = {}
-
-    def _phase(name: str, t_start: float) -> None:
-        phases[name] = round(time.monotonic() - t_start, 3)
-        print(f"[bench] {name}: {phases[name]:.1f}s", file=sys.stderr)
-
-    t0 = time.monotonic()
-    _run_to_completion(seen)
-    _phase("gen_cache", t0)
-
-    t0 = time.monotonic()
-    m_bits = seen_ops.plan_m_bits(2 * n, 16)
-    words = seen_ops.bloom_word_updates(seen, "url_key", m_bits).persist(
-        StorageLevel.MEMORY_ONLY
-    )
-    _run_to_completion(words)
-    _phase("bloom_build_one_time", t0)
-
-    t0 = time.monotonic()
-    # buckets sized for ~4 entries/bucket (the paper's packed-table
-    # operating point); power of two for the XOR pairing
-    m_buckets = 1 << max(int(_math.ceil(_math.log2(max(n // 4, 1024)))), 10)
-    table = ck.cuckoo_updates(seen, "url_key", m_buckets).persist(
-        StorageLevel.MEMORY_ONLY
-    )
-    _run_to_completion(table)
-    _phase("cuckoo_build_one_time", t0)
-
-    d_fresh = delta * 7 // 12
-    d_dup = delta - d_fresh
-    fresh = _as_links(
-        synth_frontier(spark, d_fresh, hosts, "delta"), n_parents
-    )
-    dupes = _as_links(
-        synth_frontier(spark, n, hosts, "seenset").filter(
-            F.col("discovery_seq") < d_dup
-        ),
-        n_parents,
-    )
-    links = fresh.unionByName(dupes).persist(StorageLevel.MEMORY_ONLY)
-    _run_to_completion(links)
-
-    t0 = time.monotonic()
-    unseen_b, hb = seen_ops.anti_join_via_bloom(
-        links, seen, words, "url_key", m_bits=m_bits, persist_unseen=False
-    )
-    n_bloom = unseen_b.count()
-    _phase("bloom_probe_anti_join", t0)
-
-    t0 = time.monotonic()
-    unseen_c, hc = ck.anti_join_via_cuckoo(
-        links, seen, table, "url_key", m_buckets=m_buckets
-    )
-    n_cuckoo = unseen_c.count()
-    _phase("cuckoo_probe_anti_join", t0)
-
-    # the deletable-filter maintenance op: retire a TTL-expired slice
-    # (here: the dupe prefix — the keys a re-crawl policy would free)
-    t0 = time.monotonic()
-    victims = synth_frontier(spark, n, hosts, "seenset").filter(
-        F.col("discovery_seq") < d_dup
-    )
-    _run_to_completion(
-        ck.delete_keys_cuckoo(table, victims, "url_key", m_buckets)
-    )
-    _phase("cuckoo_delete_ttl_slice", t0)
-
-    agree = n_bloom == n_cuckoo
-    for h in (seen, words, table, links):
-        h.unpersist()
-    hb.unpersist()
-    hc.unpersist()
-    return {
-        "frontier_urls": n,
-        "delta": delta,
-        "hosts": hosts,
-        "m_bits": m_bits,
-        "m_buckets": m_buckets,
-        "unseen_bloom": n_bloom,
-        "unseen_cuckoo": n_cuckoo,
-        "agree": agree,
-        "phases": phases,
-        "frontier_sched_sec": phases["cuckoo_probe_anti_join"],
-        "bloom_probe_sec": phases["bloom_probe_anti_join"],
-        "cuckoo_probe_sec": phases["cuckoo_probe_anti_join"],
     }
 
 
@@ -1231,29 +1113,6 @@ def main() -> None:
         best = _min_rep(reps)
         out = {
             "metric": "frontier_delta_sec",
-            "value": best["frontier_sched_sec"],
-            "unit": "sec",
-            "sf": None,
-            "cpus": cpus,
-            "reps_sec": [r["frontier_sched_sec"] for r in reps],
-            "phase_reps": {
-                p: [r["phases"].get(p) for r in reps]
-                for p in reps[0]["phases"]
-            },
-            **best,
-        }
-        print(json.dumps(out))
-        return
-
-    if mode == "cuckoo_rehearsal":
-        delta = int(os.environ.get("SPARK_GRAFT_DELTA", "4800000"))
-        reps = [
-            bench_cuckoo_rehearsal(spark, n, delta, cpus)
-            for _ in range(n_reps)
-        ]
-        best = _min_rep(reps)
-        out = {
-            "metric": "cuckoo_probe_sec",
             "value": best["frontier_sched_sec"],
             "unit": "sec",
             "sf": None,

@@ -9,8 +9,8 @@ Launch (north_rule packaging contract):
         --corpus /path/to/corpus_world.json \
         --checkpoint /path/to/ckpt \
         [--resume] [--max-rounds 100] [--politeness 0.5] \
-        [--round-duration 4.0] [--no-bloom] \
-        [--salt-buckets 16] [--host-buckets 32]
+        [--round-duration 4.0] [--salt-buckets 16] [--host-buckets 32] \
+        [--seen-ledger-buckets N] [--recrawl-ttl N]
 
 In the sandbox the "cluster" is local[N]; the same invocation works
 unchanged against a real master because the job only talks to the
@@ -36,7 +36,6 @@ def main() -> None:
     ap.add_argument("--max-rounds", type=int, default=1000)
     ap.add_argument("--politeness", type=float, default=0.5)
     ap.add_argument("--round-duration", type=float, default=4.0)
-    ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--host-buckets", type=int, default=32)
     ap.add_argument(
@@ -47,19 +46,12 @@ def main() -> None:
         "broadcast seen joins shuffle only the batch (sources/ledger)",
     )
     ap.add_argument(
-        "--seen-accel",
-        choices=["bloom", "cuckoo"],
-        default="bloom",
-        help="X1 maybe-set accelerator: bloom word table (default) or "
-        "the deletable cuckoo filter (operators/cuckoo — TTL re-crawl)",
-    )
-    ap.add_argument(
         "--recrawl-ttl",
         type=int,
         default=None,
         help="TTL re-crawl: retire a fetched URL's seen entry after N "
-        "rounds so rediscovery re-admits it (bit-identical across "
-        "accelerators; cuckoo actually deletes via counting deltas)",
+        "rounds so rediscovery re-admits it (the Bloom filter drops "
+        "expired keys at its next rebuild or compaction)",
     )
     ap.add_argument("--master", default=None, help="override master (else spark-submit's)")
     args = ap.parse_args()
@@ -94,11 +86,9 @@ def main() -> None:
         user_agent=USER_AGENT,
         politeness=args.politeness if args.politeness else POLITENESS,
         round_duration=args.round_duration,
-        use_bloom=not args.no_bloom,
         salt_buckets=args.salt_buckets,
         host_buckets=args.host_buckets,
         seen_ledger_buckets=args.seen_ledger_buckets,
-        seen_accel=args.seen_accel,
         recrawl_ttl=args.recrawl_ttl,
     )
     job = CrawlJob(

@@ -1,6 +1,8 @@
 """Scheduler/seen-set parity: Spark engine vs the oracle simulators
 (SURVEY.md §5.3 rows 2-3, the north_rule's bit-for-bit contract)."""
 
+import json
+
 import pytest
 
 from tests.oracle.simulator import RoundSim, SingleWorkerSim
@@ -34,7 +36,7 @@ def round_oracle(world):
     return sim.run(world.seeds)
 
 
-def _make_job(spark, world, tmp, use_bloom=True, **cfg_kw):
+def _make_job(spark, world, tmp, **cfg_kw):
     # tiny worlds: shrink physical layout knobs (results are
     # layout-independent — salting/bucketing only affect partitioning)
     cfg = CrawlConfig(
@@ -42,7 +44,6 @@ def _make_job(spark, world, tmp, use_bloom=True, **cfg_kw):
         user_agent=USER_AGENT,
         politeness=POLITENESS,
         round_duration=T,
-        use_bloom=use_bloom,
         salt_buckets=4,
         host_buckets=4,
         **cfg_kw,
@@ -105,111 +106,34 @@ def test_round_model_closure_matches_single_worker_reference(world, round_oracle
     }
 
 
-def test_bloom_off_identical(spark, world, tmp_path_factory, engine_run):
-    job = _make_job(spark, world, tmp_path_factory.mktemp("ckpt_nb"), use_bloom=False)
-    job.start(world.seeds)
-    job.run(max_rounds=60)
-    assert job.final_state() == engine_run.final_state()
-    assert job.admitted_sequences() == engine_run.admitted_sequences()
-
-
-def test_cuckoo_accel_identical(spark, world, tmp_path_factory, engine_run):
-    """seen_accel="cuckoo": the deletable filter as the X1 accelerator
-    — crawl output must be bit-for-bit the Bloom/exact runs' (the
-    no-false-negative + exact-backstop contract). A tiny m_buckets
-    forces heavy bucket collisions (dense fp sharing) so the exact
-    backstop actually earns its keep in this run."""
-    job = _make_job(
-        spark,
-        world,
-        tmp_path_factory.mktemp("ckpt_ck"),
-        seen_accel="cuckoo",
-        cuckoo_m_buckets=1 << 6,
-    )
-    job.start(world.seeds)
-    job.run(max_rounds=60)
-    assert job.final_state() == engine_run.final_state()
-    assert job.admitted_sequences() == engine_run.admitted_sequences()
-
-
-def test_accel_switch_on_resume_identical(spark, world, tmp_path_factory, engine_run):
-    """Switching the accelerator MID-CRAWL over a Bloom-era checkpoint
-    (no seen_cuckoo log in the manifest) must be seamless: the dirty
-    path rebuilds the cuckoo table from the URL ledger inside the next
-    round's commit, seeds and all — a false negative here would
-    re-admit already-crawled URLs and break the bit-for-bit contract."""
-    tmp = tmp_path_factory.mktemp("ckpt_sw")
+def test_stale_bloom_stamp_rebuilds_from_ledger(
+    spark, world, tmp_path_factory, engine_run
+):
+    """A checkpoint whose last round committed without a Bloom word
+    delta — what an engine with a cuckoo or exact-only seen path left
+    behind — keeps a ``seen_bloom`` meta whose layout still matches
+    but whose ``round`` stamp lags the manifest round. Trusting that
+    log would turn the missing round's keys into Bloom false
+    negatives (definite-unseen, no backstop) and re-admit crawled
+    URLs; the stamp gate in _ensure_filter must rebuild the filter
+    from the ledger instead."""
+    tmp = tmp_path_factory.mktemp("ckpt_stale")
     a = _make_job(spark, world, tmp)
     a.start(world.seeds)
     for _ in range(3):
         a.run_round()
-    b = _make_job(
-        spark, world, tmp, seen_accel="cuckoo", cuckoo_m_buckets=1 << 6
-    )
+    path = tmp / f"manifest_r{a.round}.json"
+    manifest = json.loads(path.read_text())
+    deltas = manifest["logs"]["seen_bloom"]["deltas"]
+    assert deltas, "last round appended no Bloom delta to drop"
+    deltas.pop()
+    manifest["meta"]["seen_bloom"]["round"] = a.round - 1
+    path.write_text(json.dumps(manifest, indent=1))
+    b = _make_job(spark, world, tmp)
     b.resume()
     b.run(max_rounds=60)
     assert b.final_state() == engine_run.final_state()
     assert b.admitted_sequences() == engine_run.admitted_sequences()
-
-
-def test_accel_flip_flop_cuckoo_stale_identical(
-    spark, world, tmp_path_factory, engine_run
-):
-    """cuckoo→bloom→cuckoo across resumes (ADVICE r3 high): rounds
-    committed under the OTHER accelerator never append to this
-    accel's log, but the manifest meta persists forever, so the old
-    clean-gate (m_buckets match + log exists) accepted a seen_cuckoo
-    log missing the Bloom-era rounds' keys — false negatives then
-    bypassed the exact backstop and silently re-admitted
-    already-crawled URLs. The per-commit ``round`` stamp in the accel
-    meta must force the from-ledger rebuild instead."""
-    tmp = tmp_path_factory.mktemp("ckpt_ffc")
-    a = _make_job(
-        spark, world, tmp, seen_accel="cuckoo", cuckoo_m_buckets=1 << 6
-    )
-    a.start(world.seeds)
-    for _ in range(2):
-        a.run_round()
-    # two rounds under Bloom: the cuckoo log now misses their keys
-    b = _make_job(spark, world, tmp)
-    b.resume()
-    for _ in range(2):
-        b.run_round()
-    # back to cuckoo: the stale round stamp must trigger the rebuild
-    c = _make_job(
-        spark, world, tmp, seen_accel="cuckoo", cuckoo_m_buckets=1 << 6
-    )
-    c.resume()
-    c.run(max_rounds=60)
-    assert c.final_state() == engine_run.final_state()
-    assert c.admitted_sequences() == engine_run.admitted_sequences()
-
-
-def test_accel_flip_flop_bloom_stale_identical(
-    spark, world, tmp_path_factory, engine_run
-):
-    """bloom→cuckoo→bloom — the symmetric stale-log case: the
-    seen_bloom word log misses the cuckoo-era rounds' keys while its
-    meta (m_bits unchanged in a tiny world) still passes the layout
-    gate; a false negative in the Bloom pre-filter marks a seen key
-    definite-unseen with no backstop. The round stamp forces
-    _ensure_filter's from-ledger rebuild."""
-    tmp = tmp_path_factory.mktemp("ckpt_ffb")
-    a = _make_job(spark, world, tmp)
-    a.start(world.seeds)
-    for _ in range(2):
-        a.run_round()
-    b = _make_job(
-        spark, world, tmp, seen_accel="cuckoo", cuckoo_m_buckets=1 << 6
-    )
-    b.resume()
-    for _ in range(2):
-        b.run_round()
-    c = _make_job(spark, world, tmp)
-    c.resume()
-    c.run(max_rounds=60)
-    assert c.final_state() == engine_run.final_state()
-    assert c.admitted_sequences() == engine_run.admitted_sequences()
 
 
 def test_bucketed_ledger_cutover_identical(

@@ -2,8 +2,8 @@
 next-round item 6): a fetched URL's seen entry retires after ``ttl``
 rounds and the frontier re-admits it on rediscovery. Contract under
 test: bit-for-bit equality of per-round admitted sequences and final
-state across bloom / cuckoo(counting) / exact accelerators AND vs the
-RoundSim oracle extended with the same TTL rule, re-fetches actually
+state vs the RoundSim oracle extended with the same TTL rule, on both
+the plain and the bucketed seen-ledger layout; re-fetches actually
 happen, every re-fetch is of a genuinely expired URL, and the mode is
 checkpoint-resumable mid-crawl."""
 
@@ -104,55 +104,19 @@ def test_ttl_refetches_exactly_the_expired_set(ttl_oracle, ttl_engine_run):
     assert any(r["count"] > 1 for r in pages_rounds)
 
 
-def test_ttl_cuckoo_counting_identical(
-    spark, world, tmp_path_factory, ttl_engine_run
-):
-    """seen_accel="cuckoo" in TTL mode switches to the COUNTING table
-    and actually deletes retired keys (-1 deltas in the round commit);
-    output must be bit-for-bit the bloom run's. Tiny m_buckets forces
-    dense (bucket, fp) sharing, so deletion safety under shared pairs
-    (the counting representation's whole point) is actually load-
-    bearing here."""
-    job = _make_job(
-        spark,
-        world,
-        tmp_path_factory.mktemp("ckpt_ttl_ck"),
-        seen_accel="cuckoo",
-        cuckoo_m_buckets=1 << 6,
-    )
-    job.start(world.seeds)
-    job.run(max_rounds=ROUNDS)
-    assert job.admitted_sequences() == ttl_engine_run.admitted_sequences()
-    assert job.final_state() == ttl_engine_run.final_state()
-
-
-def test_ttl_exact_identical(spark, world, tmp_path_factory, ttl_engine_run):
-    job = _make_job(
-        spark, world, tmp_path_factory.mktemp("ckpt_ttl_ex"), use_bloom=False
-    )
-    job.start(world.seeds)
-    job.run(max_rounds=ROUNDS)
-    assert job.admitted_sequences() == ttl_engine_run.admitted_sequences()
-    assert job.final_state() == ttl_engine_run.final_state()
-
-
 def test_ttl_resume_mid_crawl_identical(
     spark, world, tmp_path_factory, ttl_engine_run
 ):
     """Kill after round 5 (inside the TTL churn), resume in a fresh
     job object, finish — the north_rule's checkpoint-resume contract
-    must hold for the TTL mode too (cuckoo accel, so the counting
-    state also has to survive the resume)."""
+    must hold for the TTL mode too, on the plain ledger layout (the
+    Bloom word log and its TTL stamp have to survive the resume)."""
     tmp = tmp_path_factory.mktemp("ckpt_ttl_rs")
-    a = _make_job(
-        spark, world, tmp, seen_accel="cuckoo", cuckoo_m_buckets=1 << 6
-    )
+    a = _make_job(spark, world, tmp)
     a.start(world.seeds)
     for _ in range(5):
         a.run_round()
-    b = _make_job(
-        spark, world, tmp, seen_accel="cuckoo", cuckoo_m_buckets=1 << 6
-    )
+    b = _make_job(spark, world, tmp)
     assert b.resume() == 5
     b.run(max_rounds=ROUNDS - 5)
     assert b.admitted_sequences() == ttl_engine_run.admitted_sequences()

@@ -5,8 +5,6 @@ north_rule's named Bloom alternative. Invariants under test:
     bucket_cap (i.e. regardless of how many rows relocated to b2);
   * membership is site-invariant: probing a table built with heavy
     relocation equals probing the all-at-b1 table bit-for-bit;
-  * the anti-join composition equals the plain exact anti-join
-    bit-for-bit (the accelerator contract shared with seen.py);
   * deletion (the op Bloom can't do): deleted keys probe unseen
     (modulo fp-sharing, absent in the fixture), surviving keys keep
     their no-false-negative guarantee — the TTL re-crawl primitive;
@@ -60,18 +58,6 @@ def test_membership_site_invariant(spark):
     assert s1 != s2
 
 
-def test_anti_join_equals_exact(spark):
-    seen = _keys(spark, 0, 2000)
-    batch = _keys(spark, 1000, 4000)
-    tab = ck.cuckoo_table(seen, "url_key", M)
-    got, handle = ck.anti_join_via_cuckoo(batch, seen, tab, "url_key", M)
-    want = batch.join(seen, "url_key", "left_anti")
-    assert sorted(r["url_key"] for r in got.collect()) == sorted(
-        r["url_key"] for r in want.collect()
-    )
-    handle.unpersist()
-
-
 def test_delete_enables_recrawl(spark):
     inserted = _keys(spark, 0, 2000)
     expired = _keys(spark, 0, 500)  # TTL-retired slice
@@ -108,18 +94,6 @@ def test_delete_enables_recrawl(spark):
     # this fixture the overwhelming majority must clear
     still_seen = maybe & victims
     assert len(still_seen) < 25, f"{len(still_seen)} victims still maybe-seen"
-
-
-def test_incremental_updates_compose(spark):
-    a = _keys(spark, 0, 1000)
-    b = _keys(spark, 1000, 2000)
-    base = ck.cuckoo_updates(a, "url_key", M)
-    delta = ck.cuckoo_updates(b, "url_key", M)
-    merged = base.unionByName(delta).distinct()
-    both = a.unionByName(b)
-    assert (
-        ck.maybe_seen_keys_cuckoo(both, merged, "url_key", M).count() == 2000
-    )
 
 
 def test_fast_hash_pinned_to_xxh64_chain(spark):
@@ -208,96 +182,3 @@ def test_portable_hash_pinned_to_md5(spark):
         assert r["fp"] == fp, r["k"]
         assert r["b1"] == b1, r["k"]
         assert r["b2"] == b1 ^ alt, r["k"]
-
-
-# -- counting representation (TTL engine mode, r4) ----------------------
-
-
-def test_counting_no_false_negatives_and_delete(spark):
-    """Insert 3000, retire 500: every live key stays maybe; the
-    retired slice's survivors are exactly chance fp-sharers (and with
-    a BIG table, none)."""
-    inserted = _keys(spark, 0, 3000)
-    expired = _keys(spark, 0, 500)
-    tab = ck.cuckoo_count_updates(inserted, "url_key", M)
-    tab = tab.unionByName(
-        ck.cuckoo_count_updates(expired, "url_key", M, sign=-1)
-    )
-    live = _keys(spark, 500, 3000)
-    maybe = set(
-        r["url_key"]
-        for r in ck.maybe_seen_keys_cuckoo_counting(
-            _keys(spark, 0, 3000), tab, "url_key", M
-        ).collect()
-    )
-    live_set = set(r["url_key"] for r in live.collect())
-    assert live_set <= maybe  # no false negative for any live key
-    # compaction drops the net-zero pairs physically
-    folded = ck.compact_counting(tab)
-    assert folded.filter(F.col("cnt") <= 0).count() == 0
-
-
-def test_counting_safe_under_shared_pairs_where_set_form_is_not(spark):
-    """The motivating case: TWO live keys sharing a (bucket, fp) pair.
-    Retiring one via the SET form's delete clears the shared pair and
-    makes the OTHER live key a false negative; the counting form keeps
-    net 1 and stays no-false-negative. Forced via a 2-bucket table
-    (m=2) where collisions are guaranteed at this volume."""
-    m2, fp2 = 2, 2  # 2 buckets x 3 fp values: sharing is guaranteed
-    inserted = _keys(spark, 0, 64)
-    victims = _keys(spark, 0, 32)
-    live = _keys(spark, 32, 64)
-    live_set = set(r["url_key"] for r in live.collect())
-
-    set_tab = ck.cuckoo_updates(inserted, "url_key", m2, fp_bits=fp2)
-    set_after = ck.delete_keys_cuckoo(
-        set_tab, victims, "url_key", m2, fp_bits=fp2
-    )
-    set_maybe = set(
-        r["url_key"]
-        for r in ck.maybe_seen_keys_cuckoo(
-            live, set_after, "url_key", m2, fp_bits=fp2
-        ).collect()
-    )
-    assert live_set - set_maybe, "fixture no longer forces pair sharing"
-
-    cnt_tab = ck.cuckoo_count_updates(
-        inserted, "url_key", m2, fp_bits=fp2
-    ).unionByName(
-        ck.cuckoo_count_updates(victims, "url_key", m2, fp_bits=fp2, sign=-1)
-    )
-    cnt_maybe = set(
-        r["url_key"]
-        for r in ck.maybe_seen_keys_cuckoo_counting(
-            live, cnt_tab, "url_key", m2, fp_bits=fp2
-        ).collect()
-    )
-    assert live_set <= cnt_maybe
-
-
-def test_counting_reinsert_after_retire(spark):
-    """retire then re-insert (the TTL rediscovery cycle): net returns
-    to 1 and the key is maybe again; a second retire takes it back
-    out."""
-    k = _keys(spark, 0, 100)
-    tab = ck.cuckoo_count_updates(k, "url_key", M)
-    tab = tab.unionByName(ck.cuckoo_count_updates(k, "url_key", M, sign=-1))
-    tab = tab.unionByName(ck.cuckoo_count_updates(k, "url_key", M))
-    maybe = ck.maybe_seen_keys_cuckoo_counting(k, tab, "url_key", M)
-    assert maybe.count() == 100
-    tab = tab.unionByName(ck.cuckoo_count_updates(k, "url_key", M, sign=-1))
-    assert ck.compact_counting(tab).count() == 0
-
-
-def test_counting_anti_join_equals_exact(spark):
-    seen = _keys(spark, 0, 2000)
-    batch = _keys(spark, 1000, 4000)
-    tab = ck.cuckoo_count_updates(seen, "url_key", M)
-    got, handle = ck.anti_join_via_cuckoo(
-        batch, seen, tab, "url_key", M, counting=True
-    )
-    want = batch.join(seen, "url_key", "left_anti")
-    assert sorted(r["url_key"] for r in got.collect()) == sorted(
-        r["url_key"] for r in want.collect()
-    )
-    handle.unpersist()

@@ -15,11 +15,17 @@ physical plans are the two shapes under test:
     python tools/ledger_bench.py                 # 24M ledger, 4.8M batch
     python tools/ledger_bench.py --n 24000000 --batch 4800000 \
         --cpus 8 --buckets 64 --reps 3
+    python tools/ledger_bench.py --ttl           # TTL liveness view as RHS
+    python tools/ledger_bench.py --skip-plain --n 2400000000
 
-Prints one JSON line: per-rep seconds for both layouts, mins, and the
-plain/bucketed speedup. The scaling claim this evidences: the plain
-join's shuffled bytes grow with the LEDGER while the bucketed join's
-stay O(batch) — re-run with --n 10x to watch the gap widen.
+Prints one JSON line: per-rep seconds per layout, ``min_bucketed_sec``,
+and — unless ``--skip-plain`` — ``min_plain_sec`` and the
+plain/bucketed ``speedup``. ``--skip-plain`` measures the bucketed
+layout alone (for ledgers too large to also hold the plain copy on
+disk), so those two keys are then absent. The scaling claim this
+evidences: the plain join's shuffled bytes grow with the LEDGER while
+the bucketed join's stay O(batch) — re-run with --n 10x to watch the
+gap widen.
 """
 
 from __future__ import annotations

@@ -1,8 +1,8 @@
 """Cuckoo-filter URL-seen set — the north_rule's named alternative to
-the Bloom accelerator (operators/seen.py), built for the one thing a
-Bloom filter cannot do: DELETION, which is what TTL-based re-crawl
-scheduling needs (retire a fetched URL's key after ``ttl`` rounds and
-the frontier re-admits it on next discovery).
+the Bloom filter (operators/seen.py), for the one thing a Bloom filter
+cannot do: DELETION, the maintenance op a TTL re-crawl needs (retire
+a fetched URL's key after ``ttl`` rounds so its next discovery is
+admitted again).
 
 Partial-key cuckoo hashing (Fan et al. 2014, "Cuckoo Filter:
 Practically Better Than Bloom" — public paper): each key stores a
@@ -39,17 +39,14 @@ explodes each batch key into 2 skinny (key, bucket, fp) rows and
 joins ONCE on bucket+fp — O(2·batch) rows shuffle, never O(filter),
 no driver-side build. Deletes are one anti-join on the same key.
 
-Contract vs the crawl: same as the Bloom — an ACCELERATOR with no
-false negatives; the exact ledger anti-join stays authoritative
-(``anti_join_via_cuckoo`` composes the identical maybe→backstop
-shape as seen.anti_join_via_bloom). Standard cuckoo caveat on delete:
-removing key k clears the (bucket, fp) pair at BOTH of k's sites, so
-a second live key sharing a site+fingerprint with k (probability
-~2·load/2^fp_bits) loses its filter entry too — which here degrades
-to a spurious re-fetch candidate, never a lost URL, because the exact
-set is authoritative in both directions the crawl cares about.
+Scope: a standalone operator for the query catalog
+(plans/catalog.q_cuckoo_probe, q_recrawl_ttl); the crawl engine's
+URL-seen set is the Bloom word table (operators/seen.py). Standard
+cuckoo caveat on delete: removing key k clears the (bucket, fp) pair
+at BOTH of k's sites, so a second live key sharing a site+fingerprint
+with k (probability ~2·load/2^fp_bits) loses its filter entry too.
 
-Reference analog: the ``discovered_urls`` dict this accelerates is
+Reference analog: the ``discovered_urls`` dict this models is
 web_crawler/crawler/frontier.py:20-21,137-146.
 """
 
@@ -132,22 +129,6 @@ def cuckoo_table(
     )
 
 
-def cuckoo_updates(
-    keys: DataFrame,
-    key_col: str,
-    m_buckets: int,
-    fp_bits: int = FP_BITS,
-    portable: bool = False,
-) -> DataFrame:
-    """Incremental insert delta: the (bucket, fp) rows a key batch
-    adds, all at b1 (site choice is membership-invariant, and a delta
-    has no view of standing bucket loads). Union with the standing
-    table + distinct at compaction — the exact append/compact contract
-    the Bloom word log uses (plans/crawl.py round commit)."""
-    fp, b1, _ = cuckoo_cols(F.col(key_col), m_buckets, fp_bits, portable)
-    return keys.select(b1.alias("bucket"), fp.alias("fp")).distinct()
-
-
 def maybe_seen_keys_cuckoo(
     batch_keys: DataFrame,
     table: DataFrame,
@@ -189,140 +170,3 @@ def delete_keys_cuckoo(
         fp.alias("fp"), F.explode(F.array(b1, b2)).alias("bucket")
     ).distinct()
     return table.join(victim_pairs, ["bucket", "fp"], "left_anti")
-
-
-def cuckoo_count_updates(
-    keys: DataFrame,
-    key_col: str,
-    m_buckets: int,
-    fp_bits: int = FP_BITS,
-    portable: bool = False,
-    sign: int = 1,
-) -> DataFrame:
-    """COUNTING-filter delta rows ``(bucket, fp, cnt)`` for a key
-    batch — the deletion-safe representation the TTL re-crawl engine
-    mode uses (plans/crawl.py, recrawl_ttl). The set form
-    (cuckoo_updates + distinct) loses multiplicity, so deleting one
-    key's (bucket, fp) pair could strip a second live key sharing the
-    pair — a FALSE NEGATIVE, which the crawl's no-false-negative
-    contract forbids. Counting is Fan et al. 2014's own answer
-    (duplicate fingerprint copies / counting slots): every live
-    insertion contributes +1 at its canonical b1 site, every retire
-    contributes -1 at the same site, so a pair's net count equals the
-    number of LIVE keys stored there and never goes negative. Probe =
-    net count > 0 at the b1 site only (see
-    maybe_seen_keys_cuckoo_counting — b2 is never written here). ``sign=-1`` emits the delete
-    delta. Pre-aggregated per (bucket, fp), O(batch) rows."""
-    fp, b1, _ = cuckoo_cols(F.col(key_col), m_buckets, fp_bits, portable)
-    return (
-        keys.select(b1.alias("bucket"), fp.alias("fp"))
-        .groupBy("bucket", "fp")
-        .agg((F.count("*") * F.lit(sign)).cast("long").alias("cnt"))
-    )
-
-
-def compact_counting(table: DataFrame) -> DataFrame:
-    """Fold a counting-filter log (base + round deltas) to its live
-    pairs: net count per (bucket, fp), rows with net 0 dropped —
-    expired keys vanish from storage here, the compaction the Bloom
-    can only approximate by a full rebuild."""
-    return (
-        table.groupBy("bucket", "fp")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .filter(F.col("cnt") > 0)
-    )
-
-
-def maybe_seen_keys_cuckoo_counting(
-    batch_keys: DataFrame,
-    table: DataFrame,
-    key_col: str,
-    m_buckets: int,
-    fp_bits: int = FP_BITS,
-    portable: bool = False,
-) -> DataFrame:
-    """Counting-table twin of maybe_seen_keys_cuckoo: a key is MAYBE
-    iff its probed (bucket, fp) pair has net count > 0. No false
-    negatives for live keys: a live key's own +1 at b1 is in its
-    pair's sum, and per-pair nets are never negative (every -1 retires
-    a matching +1), so its pair sums > 0. Counting entries are ONLY
-    ever written at the canonical b1 site (cuckoo_count_updates and
-    the dirty rebuild both emit b1), so — unlike the set-form twin,
-    where relocation can park a fingerprint at b2 — probing b2 here
-    could never match a real entry: it would only double probe volume
-    and add a pure false-positive channel via chance b2 collisions
-    (ADVICE r4 low #3). Probe b1 only. Shape: restrict the table to
-    the probed pairs (left-semi — the aggregation then runs over the
-    matched sliver, not the O(filter) table), net per pair, semi back
-    to keys."""
-    fp, b1, _ = cuckoo_cols(F.col(key_col), m_buckets, fp_bits, portable)
-    probes = batch_keys.select(
-        F.col(key_col),
-        fp.alias("fp"),
-        b1.alias("bucket"),
-    )
-    probed_pairs = probes.select("bucket", "fp").distinct()
-    live_pairs = compact_counting(
-        table.join(probed_pairs.hint("shuffle_hash"), ["bucket", "fp"], "left_semi")
-    )
-    hits = probes.join(live_pairs.hint("shuffle_hash"), ["bucket", "fp"], "left_semi")
-    return hits.select(key_col).distinct()
-
-
-def anti_join_via_cuckoo(
-    new_df: DataFrame,
-    seen_keys: DataFrame,
-    table: DataFrame,
-    key_col: str = "url_key",
-    m_buckets: int = 1 << 20,
-    fp_bits: int = FP_BITS,
-    broadcast_limit: int = 8_000_000,
-    portable: bool = False,
-    counting: bool = False,
-):
-    """Rows of ``new_df`` whose key is NOT in ``seen_keys`` — the
-    drop-in twin of seen.anti_join_via_bloom with the cuckoo table as
-    the accelerator: filter probe → maybe set → exact ledger backstop
-    (column-pruned semi scan) → anti-join. Bit-for-bit equal to the
-    plain exact anti-join by the no-false-negative invariant (tested
-    against it in tests/unit/test_cuckoo.py). Returns
-    (unseen, ProbeHandle) — the same contract as the Bloom twin; the
-    caller unpersists the handle after its commit.
-
-    ``portable`` MUST match the flag the ``table`` was built with
-    (cuckoo_table/cuckoo_updates): the probe re-derives (fp, b1, b2)
-    from the key, and a mismatched hash family silently yields false
-    negatives instead of an error (ADVICE r3 low #3). ``counting``
-    selects the counting-table probe (TTL mode) — the ``table`` must
-    then carry (bucket, fp, cnt) rows from cuckoo_count_updates."""
-    from .seen import ProbeHandle
-
-    # persist the batch: the probe and the final anti-join are two
-    # passes over it, and its upstream (scrape + dedup lineage in the
-    # crawl) must run once per round (same contract as the Bloom twin)
-    # seen_keys: DataFrame, or callable restricted view (TTL — see
-    # seen.anti_join_via_bloom for the contract)
-    seen_of = (
-        seen_keys if callable(seen_keys) else (lambda restrict=None: seen_keys)
-    )
-    batch = new_df.persist()
-    probe_fn = maybe_seen_keys_cuckoo_counting if counting else maybe_seen_keys_cuckoo
-    maybe = probe_fn(
-        batch.select(key_col), table, key_col, m_buckets, fp_bits, portable
-    ).persist()
-    handle = ProbeHandle([batch, maybe])
-    n_maybe = maybe.count()
-    if n_maybe == 0:
-        return batch, handle
-    if n_maybe > broadcast_limit:
-        out = batch.join(seen_of().select(key_col), key_col, "left_anti")
-    else:
-        matched = (
-            seen_of(maybe).select(key_col)
-            .join(F.broadcast(maybe), key_col, "left_semi")
-            .distinct()
-            .persist()
-        )
-        handle._dfs.append(matched)
-        out = batch.join(F.broadcast(matched), key_col, "left_anti")
-    return out, handle

@@ -179,7 +179,8 @@ def assign_seq_within_parents(
     pre-partitioned on the key (the crawl's post-dedup layout), the
     wide window wins at every core count, so the skinny mode is gone.
 
-    r4 re-A/B (tools/seqassign_ab.py, interleaved same-JVM, the r3
+    r4 re-A/B (BENCH/BASELINE.md, "seq-assign phase re-A/B";
+    interleaved same-JVM, the r3
     verdict's item 5 ask): skinny re-loses under the r3.9 surrounding
     phases (4.41 vs 3.31 s at c8; 12.29 vs 7.07 s at c2), and two
     cache-layout variants aimed at the phase's memory-bandwidth

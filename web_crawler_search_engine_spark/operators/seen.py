@@ -212,8 +212,8 @@ def maybe_seen_keys(
     longs, never O(filter), and zero driver-serial broadcast build.
 
     Two alternative shapes were measured and REFUTED in a same-JVM
-    interleaved A/B at 24M standing / 4.8M batch (tools/probe_ab.py,
-    order alternated per pair): (a) a k-step sequential filtered
+    interleaved A/B at 24M standing / 4.8M batch (BENCH/BASELINE.md,
+    "Probe-shape A/B"; order alternated per pair): (a) a k-step sequential filtered
     chain where a key stops probing at its first missed bit — dead
     heat on mins (5.11 s vote vs 5.07 s chain), the chain's smaller
     row movement cancelled by re-building the words-side hash per

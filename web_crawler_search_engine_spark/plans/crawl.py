@@ -80,7 +80,6 @@ from pyspark.sql import functions as F
 from ..functions import html as H
 from ..functions import text as T
 from ..functions import urls as U
-from ..operators import cuckoo as cuckoo_ops
 from ..operators import seen as seen_ops
 from ..operators.scheduler import (
     admit,
@@ -97,6 +96,12 @@ from ..sources.ledger import (
     write_bucketed_ledger,
 )
 
+# URL-seen Bloom layout: bits per planned key, hash count, and the
+# smallest planned capacity (operators/seen.plan_m_bits).
+BLOOM_BITS_PER_KEY = 16
+BLOOM_K = 3
+BLOOM_MIN_CAPACITY = 1 << 16
+
 
 @dataclass
 class CrawlConfig:
@@ -106,37 +111,17 @@ class CrawlConfig:
     round_duration: float = 4.0
     salt_buckets: int = 16
     host_buckets: int = 32
-    use_bloom: bool = True
-    bloom_bits_per_key: int = 16
-    bloom_k: int = 3
-    bloom_min_capacity: int = 1 << 16
-    # which accelerator backs the X1 maybe-set when use_bloom is True:
-    # "bloom" (default — the word-table filter, O(n/4) standing rows)
-    # or "cuckoo" (operators/cuckoo.py — O(n) (bucket, fp) rows but
-    # DELETABLE, the TTL re-crawl path; a maintenance job retires
-    # expired keys with delete_keys_cuckoo + a frontier-log rewrite).
-    # Either way the exact anti-join backstop stays authoritative and
-    # results are bit-identical (parity-tested). State publishes in
-    # the SAME round commit as the frontier log — no second crash
-    # window — and a meta/config m_buckets mismatch (or a legacy
-    # checkpoint without the log) rebuilds the table from the URL
-    # ledger inside that commit, the Bloom's dirty-rebuild idiom.
-    seen_accel: str = "bloom"
-    cuckoo_m_buckets: int = 1 << 22
     # TTL re-crawl (engine mode, r4): a fetched URL's seen-set entry
     # retires ``recrawl_ttl`` rounds after its fetch — rediscovering
     # it afterwards re-admits it through the normal politeness path
     # with a fresh discovery_seq. Correctness anchor: the exact
     # backstop view (_seen_keys) drops a key iff its LATEST frontier
     # row is a fetch older than the window, so results are
-    # bit-identical across bloom/cuckoo/exact accelerators
-    # (parity-tested vs the RoundSim ttl oracle). Accelerator
-    # maintenance: cuckoo switches to the COUNTING representation and
-    # actually DELETES (a -1 delta per retired key in the round
-    # commit — operators/cuckoo.cuckoo_count_updates); Bloom cannot
-    # delete, so expired keys stay as harmless maybe-hits until the
-    # next compaction/capacity rebuild, which rebuilds from the live
-    # TTL view. None disables (the default crawl-once contract).
+    # bit-identical to the RoundSim ttl oracle (parity-tested). The
+    # Bloom cannot delete, so expired keys stay as harmless maybe-hits
+    # until the next compaction/capacity rebuild, which rebuilds from
+    # the live TTL view. None disables (the default crawl-once
+    # contract).
     recrawl_ttl: int | None = None
     # S4 fetch stage: "corpus" (default — the graft contract's
     # deterministic join against the synthetic network) or "http"
@@ -173,9 +158,8 @@ class CrawlConfig:
     robots_broadcast_limit: int = 256 << 20
     # opt-in: ALSO maintain the seen-key set as a bucketed+sorted
     # catalog table (sources/ledger.py), so the non-broadcast seen
-    # joins (use_bloom=False, and the Bloom cutover path) shuffle
-    # only the batch side — the ledger scans in its bucket layout at
-    # any size. Results are bit-identical either way (parity-tested);
+    # join (the Bloom cutover path) shuffles only the batch side — the
+    # ledger scans in its bucket layout at any size. Results are bit-identical either way (parity-tested);
     # this only changes the physical plan of the X1 joins.
     seen_ledger_buckets: int | None = None
 
@@ -521,8 +505,7 @@ class CrawlJob:
         DROPPED — expiry is monotone in the probe round (the cut only
         grows and _mr==_fr is frozen until new rows arrive), so an
         expired key can never flip back, and this is where expired
-        keys physically leave ledger storage (the same claim the
-        counting cuckoo makes at its compaction)."""
+        keys physically leave ledger storage."""
         cut = probe_round - self.config.recrawl_ttl
         live = seen_ops.ttl_live_agg(
             self._log().select(
@@ -858,61 +841,10 @@ class CrawlJob:
         self._plog_prune = stored == want
         return r
 
-    # -- cuckoo filter lifecycle (seen_accel="cuckoo") -----------------
-    def _cuckoo_state(self) -> tuple[DataFrame, bool]:
-        """(table, dirty): the standing (bucket, fp) filter to probe
-        this round. Clean when the committed ``seen_cuckoo`` log
-        exists AND its recorded m_buckets matches the config AND its
-        recorded ``round`` stamp equals the last committed round —
-        otherwise (legacy checkpoint, config change, round 1, or a
-        resume after rounds ran under a DIFFERENT seen_accel, whose
-        keys this log never saw — ADVICE r3 high) the table is built
-        lazily from the full URL ledger (the same no-false-negative
-        guarantee the Bloom's dirty rebuild gives: seeds and every
-        earlier round's keys are covered) and the round commit
-        publishes it via log_compact. The round stamp is re-published
-        at EVERY commit while this accel is active, so stamp ==
-        manifest round ⟺ no other accel owned any committed round
-        since the log was last written."""
-        cfg = self.config
-        counting = cfg.recrawl_ttl is not None
-        meta = (self.store.manifest() or {}).get("meta", {}).get(
-            "seen_cuckoo", {}
-        )
-        # the ttl gate also covers counting-vs-set layout (counting ⟺
-        # ttl set) AND a ttl VALUE change: retirements fired at the
-        # old boundary make the stored counts wrong for any other ttl
-        if (
-            meta.get("m_buckets") == cfg.cuckoo_m_buckets
-            and meta.get("round") == self.round
-            and meta.get("ttl") == cfg.recrawl_ttl
-        ):
-            try:
-                return self.store.load_log("seen_cuckoo"), False
-            except FileNotFoundError:
-                pass
-        if counting:
-            # TTL mode: counting table from the LIVE seen view — keys
-            # already expired for this probe round are simply absent,
-            # exactly the state per-round -1 deltas would have left
-            return (
-                cuckoo_ops.cuckoo_count_updates(
-                    self._seen_keys(), "url_key", cfg.cuckoo_m_buckets
-                ),
-                True,
-            )
-        return (
-            cuckoo_ops.cuckoo_updates(
-                self._seen_keys(), "url_key", cfg.cuckoo_m_buckets
-            ),
-            True,
-        )
-
     # -- Bloom filter lifecycle ----------------------------------------
     def _want_m(self) -> int:
-        cfg = self.config
         return seen_ops.plan_m_bits(
-            max(self._n_seen * 4, cfg.bloom_min_capacity), cfg.bloom_bits_per_key
+            max(self._n_seen * 4, BLOOM_MIN_CAPACITY), BLOOM_BITS_PER_KEY
         )
 
     def _ensure_filter(self) -> None:
@@ -929,11 +861,11 @@ class CrawlJob:
         if self._seen_words is not None and self._m_bits == want_m:
             return
         # the from-log path additionally requires the log's round
-        # stamp to equal the last committed round: rounds committed
-        # under seen_accel="cuckoo" never append Bloom words, so a
-        # stale stamp means the log is missing those rounds' keys and
-        # must be rebuilt from the ledger (ADVICE r3 high — the
-        # symmetric case of _cuckoo_state's gate).
+        # stamp to equal the last committed round: a checkpoint whose
+        # last rounds committed without appending Bloom words (written
+        # by an engine that also offered a cuckoo or exact-only seen
+        # path) carries a stale stamp, so the log is missing those
+        # rounds' keys and must be rebuilt from the ledger.
         meta = (self.store.manifest() or {}).get("meta", {}).get("seen_bloom", {})
         if (
             self._seen_words is None
@@ -962,7 +894,7 @@ class CrawlJob:
             else self._log().select("url_key")
         )
         self._seen_words = seen_ops.bloom_word_updates(
-            rebuild_keys, "url_key", want_m, cfg.bloom_k
+            rebuild_keys, "url_key", want_m, BLOOM_K
         ).localCheckpoint(eager=False)
         self._delta_words = None
         # any existing log may be stale or an older layout: the next
@@ -1144,40 +1076,22 @@ class CrawlJob:
         # pre-filter only skips definite-unseen keys; the exact
         # backstop remains authoritative (FP-safe). All JVM-side.
         seen_keys = self._seen_view()
-        probe_handle = None  # DataFrame or seen_ops.ProbeHandle
-        self._cuckoo_dirty = False
-        if cfg.use_bloom and cfg.seen_accel == "cuckoo":
-            ck_table, self._cuckoo_dirty = self._cuckoo_state()
-            unseen, probe_handle = cuckoo_ops.anti_join_via_cuckoo(
-                batch_unique,
-                seen_keys,
-                ck_table,
-                "url_key",
-                m_buckets=cfg.cuckoo_m_buckets,
-                broadcast_limit=cfg.bloom_broadcast_limit,
-                counting=cfg.recrawl_ttl is not None,
-            )
-        elif cfg.use_bloom:
-            self._ensure_filter()
-            # persist_unseen=False: the cached seq-assign below ranks
-            # straight through the anti-join and caches the RANKED
-            # rows — caching unseen too would double the wide-row
-            # cache-write bandwidth per round (r3.3)
-            unseen, probe_handle = seen_ops.anti_join_via_bloom(
-                batch_unique,
-                seen_keys,
-                self._seen_words,
-                "url_key",
-                m_bits=self._m_bits,
-                k=cfg.bloom_k,
-                broadcast_limit=cfg.bloom_broadcast_limit,
-                delta_words=self._delta_words,
-                persist_unseen=False,
-            )
-        else:
-            seen_df = seen_keys() if callable(seen_keys) else seen_keys
-            unseen = batch_unique.join(seen_df, "url_key", "left_anti")
-            probe_handle = None
+        self._ensure_filter()
+        # persist_unseen=False: the cached seq-assign below ranks
+        # straight through the anti-join and caches the RANKED rows —
+        # caching unseen too would double the wide-row cache-write
+        # bandwidth per round (r3.3)
+        unseen, probe_handle = seen_ops.anti_join_via_bloom(
+            batch_unique,
+            seen_keys,
+            self._seen_words,
+            "url_key",
+            m_bits=self._m_bits,
+            k=BLOOM_K,
+            broadcast_limit=cfg.bloom_broadcast_limit,
+            delta_words=self._delta_words,
+            persist_unseen=False,
+        )
         if self._base is None:
             mx = self.frontier.agg(F.max("discovery_seq")).collect()[0][0]
             self._base = (mx if mx is not None else -1) + 1
@@ -1372,129 +1286,41 @@ class CrawlJob:
             "host_meta": host_meta_delta,
         }
         commit_compacts: dict[str, DataFrame] = {}
-        bloom_meta = None
-        bloom_rebuilt = False
         self._n_seen += n_new
-        if cfg.use_bloom and cfg.seen_accel == "cuckoo":
-            # cuckoo accelerator state — same single-commit discipline
-            # as the Bloom word delta below: the (bucket, fp) rows for
-            # this round's keys publish IN the round manifest, and a
-            # dirty table (legacy checkpoint / m_buckets change /
-            # round 1 / accel flip — see _cuckoo_state) is rebuilt
-            # from the full URL ledger via log_compact in that same
-            # atomic commit. The meta carries a ``round`` stamp and is
-            # re-published EVERY active round (even n_new == 0), so a
-            # later resume can tell a complete log from one that
-            # missed rounds committed under the other accelerator
-            # (ADVICE r3 high), and a dirty rebuild is published even
-            # on a zero-discovery round (ADVICE r3 low #2 — skipping
-            # it left every later round re-deriving the table from
-            # the O(ledger) URL log at probe time).
-            ttl = cfg.recrawl_ttl
-            bloom_meta = {
-                "seen_cuckoo": {
-                    "m_buckets": cfg.cuckoo_m_buckets,
-                    "round": r,
-                    "ttl": ttl,
-                }
+        want_m = self._want_m()
+        bloom_meta = {
+            "seen_bloom": {
+                "m_bits": want_m,
+                "k": BLOOM_K,
+                "n_keys": self._n_seen,
+                "round": r,
+                "ttl": cfg.recrawl_ttl,
             }
-            if self._cuckoo_dirty:
-                if ttl is not None:
-                    # counting rebuild from the live TTL view at the
-                    # NEXT probe round's cut: keys expiring at this
-                    # boundary are already absent, so no -1 delta is
-                    # appended alongside a rebuild
-                    commit_compacts["seen_cuckoo"] = (
-                        cuckoo_ops.cuckoo_count_updates(
-                            self._seen_keys(probe_round=r + 1).unionByName(
-                                new_links.select("url_key")
-                            ),
-                            "url_key",
-                            cfg.cuckoo_m_buckets,
-                        )
-                    )
-                else:
-                    all_keys = self._log().select("url_key").unionByName(
-                        new_links.select("url_key")
-                    )
-                    commit_compacts["seen_cuckoo"] = cuckoo_ops.cuckoo_updates(
-                        all_keys, "url_key", cfg.cuckoo_m_buckets
-                    )
-            elif ttl is not None:
-                # TTL counting deltas: +1 per discovered key, -1 per
-                # key retiring at this commit's boundary (its latest
-                # row is the fetch of round r - ttl — the round whose
-                # fetches expire for round r+1's probe). The cuckoo
-                # filter actually DELETES — the op Bloom cannot do.
-                delta = None
-                if n_new > 0:
-                    delta = cuckoo_ops.cuckoo_count_updates(
-                        new_links.select("url_key"),
-                        "url_key",
-                        cfg.cuckoo_m_buckets,
-                    )
-                if r - ttl >= 1:
-                    victims = self._log().filter(
-                        (F.col("status") == "fetched")
-                        & (F.col("round") == F.lit(r - ttl))
-                    )
-                    retire = cuckoo_ops.cuckoo_count_updates(
-                        victims.select("url_key"),
-                        "url_key",
-                        cfg.cuckoo_m_buckets,
-                        sign=-1,
-                    )
-                    delta = (
-                        retire if delta is None else delta.unionByName(retire)
-                    )
-                if delta is not None:
-                    commit_appends["seen_cuckoo"] = delta
-            elif n_new > 0:
-                commit_appends["seen_cuckoo"] = cuckoo_ops.cuckoo_updates(
-                    new_links.select("url_key"),
-                    "url_key",
-                    cfg.cuckoo_m_buckets,
-                )
-        elif cfg.use_bloom:
-            want_m = self._want_m()
-            bloom_meta = {
-                "seen_bloom": {
-                    "m_bits": want_m,
-                    "k": cfg.bloom_k,
-                    "n_keys": self._n_seen,
-                    "round": r,
-                    "ttl": cfg.recrawl_ttl,
-                }
-            }
-            if want_m != self._m_bits or self._filter_log_dirty:
-                # rebuild at the new layout from the full URL ledger:
-                # the pre-commit log plus this round's discoveries
-                # (denied/fetched rows only change status of keys the
-                # log already holds). TTL mode rebuilds from the LIVE
-                # view — Bloom can't delete, so capacity rebuilds and
-                # compaction are where expired keys actually leave the
-                # filter (between rebuilds they are harmless
-                # maybe-hits resolved by the TTL-aware backstop).
-                self._m_bits = want_m
-                base_keys = (
-                    self._seen_keys(probe_round=r + 1)
-                    if cfg.recrawl_ttl is not None
-                    else self._log().select("url_key")
-                )
-                all_keys = base_keys.unionByName(
-                    new_links.select("url_key")
-                )
-                commit_compacts["seen_bloom"] = seen_ops.bloom_word_updates(
-                    all_keys, "url_key", want_m, cfg.bloom_k
-                )
-                bloom_rebuilt = True
-            elif n_new > 0:
-                commit_appends["seen_bloom"] = seen_ops.bloom_word_updates(
-                    new_links.select("url_key"),
-                    "url_key",
-                    self._m_bits,
-                    cfg.bloom_k,
-                )
+        }
+        bloom_rebuilt = want_m != self._m_bits or self._filter_log_dirty
+        if bloom_rebuilt:
+            # rebuild at the new layout from the full URL ledger: the
+            # pre-commit log plus this round's discoveries
+            # (denied/fetched rows only change status of keys the log
+            # already holds). TTL mode rebuilds from the LIVE view —
+            # Bloom can't delete, so capacity rebuilds and compaction
+            # are where expired keys actually leave the filter
+            # (between rebuilds they are harmless maybe-hits resolved
+            # by the TTL-aware backstop).
+            self._m_bits = want_m
+            base_keys = (
+                self._seen_keys(probe_round=r + 1)
+                if cfg.recrawl_ttl is not None
+                else self._log().select("url_key")
+            )
+            all_keys = base_keys.unionByName(new_links.select("url_key"))
+            commit_compacts["seen_bloom"] = seen_ops.bloom_word_updates(
+                all_keys, "url_key", want_m, BLOOM_K
+            )
+        elif n_new > 0:
+            commit_appends["seen_bloom"] = seen_ops.bloom_word_updates(
+                new_links.select("url_key"), "url_key", self._m_bits, BLOOM_K
+            )
 
         if cfg.seen_ledger_buckets and (
             n_new > 0 or self._ledger_ttl()
@@ -1554,9 +1380,7 @@ class CrawlJob:
             },
             log_appends=commit_appends,
             log_compact=commit_compacts or None,
-            meta=(
-                {**(bloom_meta or {}), **(ledger_meta or {})} or None
-            ),
+            meta={**bloom_meta, **(ledger_meta or {})},
             partition_by={"pending_log": ["pos_bucket"]},
             options={
                 "frontier_log": KEY_BLOOM_OPTIONS,
@@ -1602,20 +1426,19 @@ class CrawlJob:
         # small ACCUMULATOR layer only — the O(m) base is untouched
         # until compaction, so the per-round filter refresh costs
         # O(words touched since compaction), never O(m_bits).
-        if cfg.use_bloom and cfg.seen_accel != "cuckoo":
-            if bloom_rebuilt:
-                self._seen_words = self.store.load_log(
-                    "seen_bloom"
-                ).localCheckpoint(eager=False)
-                self._delta_words = None
-                self._filter_log_dirty = False
-            elif n_new > 0:
-                round_delta = self.store.load_log_delta("seen_bloom", r)
-                self._delta_words = (
-                    round_delta
-                    if self._delta_words is None
-                    else seen_ops.or_words(self._delta_words, round_delta)
-                ).localCheckpoint(eager=False)
+        if bloom_rebuilt:
+            self._seen_words = self.store.load_log(
+                "seen_bloom"
+            ).localCheckpoint(eager=False)
+            self._delta_words = None
+            self._filter_log_dirty = False
+        elif n_new > 0:
+            round_delta = self.store.load_log_delta("seen_bloom", r)
+            self._delta_words = (
+                round_delta
+                if self._delta_words is None
+                else seen_ops.or_words(self._delta_words, round_delta)
+            ).localCheckpoint(eager=False)
 
         for h in (
             admitted,
@@ -1706,9 +1529,7 @@ class CrawlJob:
             "pending_log": plog_base,
             "host_meta": host_meta_base,
         }
-        fold_bloom = self.config.use_bloom and self.store.log_delta_count(
-            "seen_bloom"
-        )
+        fold_bloom = self.store.log_delta_count("seen_bloom")
         if fold_bloom:
             if self.config.recrawl_ttl is not None:
                 # TTL mode: compaction is where expired keys actually
@@ -1719,7 +1540,7 @@ class CrawlJob:
                     self._seen_keys(),
                     "url_key",
                     self._m_bits or self._want_m(),
-                    self.config.bloom_k,
+                    BLOOM_K,
                 )
             else:
                 compacted["seen_bloom"] = (
@@ -1727,21 +1548,6 @@ class CrawlJob:
                     .groupBy("word_id")
                     .agg(F.bit_or("word").alias("word"))
                 )
-        if self.store.log_delta_count("seen_cuckoo"):
-            if self.config.recrawl_ttl is not None:
-                # counting table: net per pair, zero-count (expired)
-                # pairs physically dropped
-                compacted["seen_cuckoo"] = cuckoo_ops.compact_counting(
-                    self.store.load_log("seen_cuckoo")
-                )
-            else:
-                # fold duplicate (bucket, fp) pairs across round
-                # deltas (probing ignores dups; compaction bounds the
-                # file count and row growth, same contract as the
-                # word log)
-                compacted["seen_cuckoo"] = self.store.load_log(
-                    "seen_cuckoo"
-                ).distinct()
         ledger_meta = None
         old_ledger_version = None
         if self.config.seen_ledger_buckets:

@@ -194,7 +194,8 @@ class ServingIndex:
     cannot.
 
     Two structural latency cuts over search()/search_rows, both
-    measured by interleaved same-JVM A/B (tools/serve_ab.py):
+    measured by interleaved same-JVM A/B (BENCH/BASELINE.md, "Warm
+    search serving"):
 
     * COVERING postings: ``(url, title)`` are denormalized into the
       cached postings at load (one join, once), so the whole query
