@@ -824,11 +824,13 @@ def bench_serve_rehearsal(spark: SparkSession, n_pages: int, cpus: int) -> dict:
     analog of the reference's resident process ("a few ms" per query
     over a 55k-page in-process index, README.md:23). One session
     builds + writes the token-bucketed index, loads it ONCE
-    (read_index + persist, the long-lived server's state), then runs
-    M warm queries through the full plans/search.py lifecycle and
-    reports per-query wall latency (p50/p90) next to the cold first
-    query. The scan stays pruned to the query's token buckets — the
-    property that makes warm latency independent of index size.
+    (read_index + persist, then a ServingIndex — the long-lived
+    server's state), answers the first query cold through the batch
+    search() plan and asserts the ServingIndex returns the same rows,
+    then runs M warm queries through ServingIndex.query and reports
+    per-query wall latency (p50/p90) next to the cold first query.
+    The scan stays pruned to the query's token buckets — the property
+    that makes warm latency independent of index size.
 
     The page corpus is synthesized DISTRIBUTIVELY (JVM expressions
     over spark.range — no driver-side world loop), so the mode scales
@@ -842,8 +844,8 @@ def bench_serve_rehearsal(spark: SparkSession, n_pages: int, cpus: int) -> dict:
         write_index,
     )
     from web_crawler_search_engine_spark.plans.search import (
+        ServingIndex,
         search,
-        search_rows,
     )
     from web_crawler_search_engine_spark.sources.corpus import _WORDS
 
@@ -886,8 +888,6 @@ def bench_serve_rehearsal(spark: SparkSession, n_pages: int, cpus: int) -> dict:
     docs_r.count()
     load_s = time.monotonic() - t0
 
-    from web_crawler_search_engine_spark.plans.search import ServingIndex
-
     # serving-session tuning (runtime-settable confs, restored after):
     # a top-5 query aggregates a few thousand postings rows — 64
     # shuffle partitions means 64 near-empty reduce tasks per query,
@@ -904,9 +904,9 @@ def bench_serve_rehearsal(spark: SparkSession, n_pages: int, cpus: int) -> dict:
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(max(cpus // 4, 2)))
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # resident serving state: the covering ServingIndex (r5 —
-        # (url,title) denormalized into the postings cache at load,
-        # one job + one py4j call per warm query).
+        # resident serving state: the ServingIndex (r5 — (url,title)
+        # denormalized into the postings cache at load, one job + one
+        # py4j call per warm query).
         # SPARK_GRAFT_SERVE_LAYOUT=disk measures the at-scale layout
         # (token-sorted bucket-partitioned parquet, row-group skip).
         t0 = time.monotonic()
@@ -930,11 +930,9 @@ def bench_serve_rehearsal(spark: SparkSession, n_pages: int, cpus: int) -> dict:
             postings_r, docs_r, queries[0], k=5, buckets=buckets
         ).collect()
         cold_ms = (time.monotonic() - t0) * 1000.0
-        # serving-path equivalence spot checks on the cold query:
-        # batch plan ≡ search_rows twin ≡ covering ServingIndex
-        warm0 = search_rows(postings_r, docs_r, queries[0], k=5, buckets=buckets)
-        assert [r.asDict() for r in cold_rows] == warm0
-        assert idx.query(queries[0], k=5) == warm0
+        # serving-path equivalence spot check on the cold query: the
+        # batch plan and the resident ServingIndex return the same rows
+        assert [r.asDict() for r in cold_rows] == idx.query(queries[0], k=5)
 
         lat_ms = []
         for q in queries[1:]:

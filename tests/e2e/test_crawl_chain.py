@@ -166,44 +166,14 @@ def test_search_over_crawled_index_with_snippets(crawl_index, job, world, oracle
             assert r["context"] == expect, (q, r["url"])
 
 
-def test_search_rows_serving_path_identical(crawl_index, job):
-    """plans/search.search_rows (the --serve / serve_rehearsal warm
-    path) must return exactly search()'s rows — same docs, scores,
-    order, and snippets — for hit, fallback-hit, and miss queries.
-    Checked for BOTH warm shapes: the separate-pages two-job path and
-    the fused single-job path over a serving_table (content pre-joined
-    at load, snippet projected inside the same fused query)."""
-    docs_df, postings_df, _ = crawl_index
-    pages = job.pages().select("url", "content")
-    serving = S.serving_table(docs_df, pages)
-    for q in ("lantern", "granite harbor", "the crawler walks",
-              "zzznotaword", "harbors"):
-        want = [
-            r.asDict()
-            for r in S.search(
-                postings_df, docs_df, q, pages=pages
-            ).collect()
-        ]
-        got = S.search_rows(postings_df, docs_df, q, pages=pages)
-        assert got == want, q
-        fused = S.search_rows(postings_df, serving, q)
-        assert fused == want, ("fused", q)
-        # metadata-only serving (no snippets): same rows minus context
-        bare = S.search_rows(postings_df, S.serving_table(docs_df), q)
-        assert bare == [
-            {kk: v for kk, v in r.items() if kk != "context"} for r in want
-        ], ("bare", q)
-
-
 def test_serving_index_identical(crawl_index, job):
     """plans/search.ServingIndex (the resident covering-cache serving
     handle behind --serve and serve_rehearsal) must return exactly
-    search()'s rows for hit, fallback-hit, and miss queries — in all
-    four shapes: covering / non-covering × with / without snippets."""
+    search()'s rows for hit, fallback-hit, and miss queries — both
+    with separate pages (snippets) and bare (metadata only)."""
     docs_df, postings_df, _ = crawl_index
     pages = job.pages().select("url", "content")
     idx_cov = S.ServingIndex(postings_df, docs_df, pages=pages)
-    idx_plain = S.ServingIndex(postings_df, docs_df, pages=pages, covering=False)
     idx_bare = S.ServingIndex(postings_df, docs_df)
     try:
         for q in ("lantern", "granite harbor", "the crawler walks",
@@ -215,7 +185,6 @@ def test_serving_index_identical(crawl_index, job):
                 ).collect()
             ]
             assert idx_cov.query(q) == want, ("covering", q)
-            assert idx_plain.query(q) == want, ("plain", q)
             bare_want = [
                 {kk: v for kk, v in r.items() if kk != "context"}
                 for r in want
@@ -223,5 +192,4 @@ def test_serving_index_identical(crawl_index, job):
             assert idx_bare.query(q) == bare_want, ("bare", q)
     finally:
         idx_cov.close()
-        idx_plain.close()
         idx_bare.close()

@@ -1,6 +1,8 @@
 """Index + search e2e parity: Spark job vs the pure-Python oracle
 (SURVEY §5.3 rows 'dedup parity' and 'index/search e2e')."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -247,7 +249,8 @@ def test_serving_index_disk_layout_identical(
     written once as token-sorted, bucket-partitioned parquet (the
     at-scale serving shape, BENCH/BASELINE.md §r5) — must answer
     every query identically to the memory-cached layout and to the
-    batch search() plan."""
+    batch search() plan. Also pins the constructor's input checks and
+    that close() removes the disk layout's temp dir and temp view."""
     from web_crawler_search_engine_spark.plans.indexer import (
         read_index,
         write_index,
@@ -257,8 +260,14 @@ def test_serving_index_disk_layout_identical(
     path = str(tmp_path_factory.mktemp("idx_serve"))
     write_index(docs_df, postings_df, path, buckets=8)
     postings2, docs2, buckets = read_index(spark, path)
+    with pytest.raises(ValueError, match="layout"):
+        S.ServingIndex(postings2, docs2, buckets=buckets, layout="bogus")
+    with pytest.raises(ValueError, match="bucket count"):
+        S.ServingIndex(postings2, docs2, layout="disk")
     mem = S.ServingIndex(postings2, docs2, buckets=buckets)
     disk = S.ServingIndex(postings2, docs2, buckets=buckets, layout="disk")
+    disk_path, disk_view = disk._disk_dir, disk._pview
+    assert os.path.isdir(disk_path) and spark.catalog.tableExists(disk_view)
     try:
         for q in ["granite harbor", "lantern", "apple bridge circuit dawn",
                   "zzznotaword"]:
@@ -273,3 +282,5 @@ def test_serving_index_disk_layout_identical(
     finally:
         mem.close()
         disk.close()
+    assert not os.path.exists(disk_path)
+    assert not spark.catalog.tableExists(disk_view)

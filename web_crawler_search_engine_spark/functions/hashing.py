@@ -39,10 +39,6 @@ def rolling_hash_str(text: str) -> int:
         return int((codes * powers).sum(dtype=np.uint32))
 
 
-def rolling_hash_batch(texts) -> list[int]:
-    return [rolling_hash_str(t) if t is not None else None for t in texts]
-
-
 def _rotl(x: int, r: int) -> int:
     return ((x << r) | (x >> (64 - r))) & 0xFFFFFFFFFFFFFFFF
 

@@ -139,92 +139,6 @@ def assign_global_seq(
     )
 
 
-def assign_seq_within_parents(
-    df: DataFrame,
-    parent_col: str,
-    pos_col: str,
-    base: int,
-    seq_col: str = "discovery_seq",
-    max_driver_parents: int = 200_000,
-) -> DataFrame:
-    """Dense global sequence over the total order (parent, pos) for the
-    per-round link batch — equivalent to assign_global_seq on
-    [parent_col, pos_col] but with no range partitioning, sampling, or
-    checkpoint.
-
-    Works because the parent set of one round is the ADMITTED set,
-    bounded by hosts x politeness-quota (P7): per-parent link counts
-    collect to the driver for an exact prefix sum, broadcast back, and
-    each link gets offset[parent] + rank-within-parent (a hash-
-    partitioned window - scales with cores, no global sort). The
-    resulting values are identical to the global dense rank because
-    (parent, pos) is a total order.
-
-    Above ``max_driver_parents`` distinct parents the driver pass is
-    the wrong shape (O(parents) rows to one process); the operator
-    switches to the fully distributed range-partitioned path
-    (assign_global_seq) — identical values, no driver state. The probe
-    is a bounded ``take``, never an unbounded collect.
-
-    The window ranks the FULL rows directly (one hash shuffle of the
-    batch on parent + an in-partition sort). An earlier revision
-    offered a "skinny" mode that ranked a (key, parent, pos)
-    projection and joined the (key, seq) map back onto the wide rows,
-    reasoning that the windowed sort would move ~24-byte rows instead
-    of URL strings — but the join-back has to re-shuffle the wide rows
-    anyway, so that shape pays skinny-shuffle + sort + join ON TOP of
-    the same wide-row movement. A/B at a 4.8M-link batch over a 24M
-    frontier (min of 3 warm reps): wide-window 5.1 s / 11.6 s at
-    8 / 2 cores vs skinny 6.2 s / 14.9 s — even when the batch arrives
-    pre-partitioned on the key (the crawl's post-dedup layout), the
-    wide window wins at every core count, so the skinny mode is gone.
-
-    r4 re-A/B (BENCH/BASELINE.md, "seq-assign phase re-A/B";
-    interleaved same-JVM, the r3
-    verdict's item 5 ask): skinny re-loses under the r3.9 surrounding
-    phases (4.41 vs 3.31 s at c8; 12.29 vs 7.07 s at c2), and two
-    cache-layout variants aimed at the phase's memory-bandwidth
-    ceiling — ranked persisted DISK_ONLY (serialized+lz4 via the
-    block manager) and MEMORY_AND_DISK (serialized in memory) — are
-    a DEAD HEAT with the plain deserialized cache across two bracketed
-    passes (c8 mins 3.25/3.16/3.20; c2 mins 7.05/7.02/7.03; a first-
-    pass 11% disk win did not replicate). The phase's sub-0.7 N→4N
-    scaling tracks the HOST's mem_stream calibration ceiling
-    (0.55–0.70 in the same windows): the cache write moves wide-row
-    bytes, and one box cannot multiply memory bandwidth with
-    executors — on a real multi-node cluster the write is against
-    per-node bandwidth. Shape kept: wide window + deserialized cache.
-
-    The input is NOT persisted here — the caller passes its round
-    batch already cached (the crawl persists the probed batch), so the
-    passes (counts, rank) all hit that cache. (The r1 version
-    persisted internally and leaked one cached DataFrame per round —
-    judge/advisor finding.)
-    """
-    spark = df.sparkSession
-    grouped = df.groupBy(parent_col).agg(F.count("*").alias("_n"))
-    head = grouped.take(max_driver_parents + 1)
-    if len(head) > max_driver_parents:
-        return assign_global_seq(df, [parent_col, pos_col], base, seq_col)
-    cnts = sorted(head, key=lambda r: r[parent_col])
-    if not cnts:
-        return df.withColumn(seq_col, F.lit(base).cast("long"))
-    acc = base
-    offs = []
-    for r in cnts:
-        offs.append((r[parent_col], acc))
-        acc += r["_n"]
-    odf = spark.createDataFrame(offs, f"{parent_col} long, _off long")
-    w = Window.partitionBy(parent_col).orderBy(pos_col)
-    return (
-        df.join(F.broadcast(odf), parent_col)
-        .withColumn(
-            seq_col, (F.col("_off") + F.row_number().over(w) - 1).cast("long")
-        )
-        .drop("_off")
-    )
-
-
 def assign_seq_within_parents_cached(
     df: DataFrame,
     parent_col: str,
@@ -233,32 +147,36 @@ def assign_seq_within_parents_cached(
     seq_col: str = "discovery_seq",
     max_driver_parents: int = 200_000,
 ) -> tuple[DataFrame, DataFrame, int]:
-    """assign_seq_within_parents for a LAZY input whose recompute is
-    expensive (the post-probe unseen batch): rank first, cache the
-    ranked rows, and derive everything else from that one cache.
+    """Dense global sequence over the total order (parent, pos) for the
+    per-round link batch: values identical to assign_global_seq on
+    [parent_col, pos_col] (same total order, same prefix sums), but with
+    no range partitioning, sampling or checkpoint.
 
-    assign_seq_within_parents needs two passes over its input (the
-    per-parent counts, then the window), so callers fed it a persisted
-    DataFrame — which cost a full extra wide-row cache write+read per
-    round on top of the window's own materialization (at 24M/4.8M the
-    round cache-wrote the wide link rows three times: batch, unseen,
-    new_links — the measured bandwidth hog on the N-vs-4N profile).
-    Here the window runs DIRECTLY over the lazy input (its shuffle is
-    the single wide materialization), `_rk` (rank within parent) is
-    cached with the rows, and the per-parent counts fall out of the
-    cache as max(_rk) — so the returned ``new_links`` is a zero-
-    shuffle projection (tiny broadcast offset join + one add) that
-    every downstream consumer reads straight off the cache.
+    Works because the parent set of one round is the ADMITTED set,
+    bounded by hosts x politeness-quota (P7): a hash-partitioned window
+    ranks each link within its parent (`_rk`), the ranked rows are
+    cached, the per-parent counts fall out of the cache as max(_rk)
+    and collect to the driver for an exact prefix sum, and each link
+    gets offset[parent] + _rk - 1 via a tiny broadcast join. The input
+    stays LAZY (the post-probe unseen batch): the window's shuffle is
+    the single wide materialization, so the returned ``new_links`` is
+    a zero-shuffle projection every downstream consumer reads straight
+    off the cache (persisting the input as well cost a full extra
+    wide-row cache write+read per round).
+
+    The window ranks the FULL rows directly: a "skinny" rank over a
+    (key, parent, pos) projection plus a join-back has to re-shuffle
+    the wide rows anyway, and lost every interleaved A/B at every core
+    count (BENCH/BASELINE.md, "seq-assign phase re-A/B").
 
     Returns (new_links, cache, n_rows): caller unpersists ``cache``
     after its round commit; ``n_rows`` is exact (the offset prefix
-    sum), saving the count() action callers used to pay.
-
-    Values are identical to assign_seq_within_parents (same total
-    order, same prefix sums). Above ``max_driver_parents`` parents the
-    fallback ranks the cached rows with the fully distributed
-    assign_global_seq — the wasted _rk column is dropped; values
-    again identical.
+    sum), saving a count() action. Above ``max_driver_parents``
+    distinct parents (probed with a bounded ``take``, never an
+    unbounded collect) the driver pass is the wrong shape, so the
+    cached rows are ranked with the fully distributed
+    assign_global_seq instead — the wasted _rk column is dropped;
+    values again identical.
     """
     spark = df.sparkSession
     w = Window.partitionBy(parent_col).orderBy(pos_col)

@@ -10,7 +10,11 @@ driver-side Python — queries are single strings, not data. The top-k
 is collected once (≤ k rows) so the empty-check, metadata join, and
 snippet pass share one scoring execution and nothing stays cached
 behind (the r1 version ran the query twice; r2.0 leaked one persisted
-DataFrame per query)."""
+DataFrame per query).
+
+Two serving paths, pinned to each other row-for-row: ``search`` (the
+batch/reference plan above) and ``ServingIndex`` (the resident warm
+handle behind ``search_job --serve``)."""
 
 from __future__ import annotations
 
@@ -103,9 +107,9 @@ def latest_pages(pages_log: DataFrame) -> DataFrame:
     hold several rounds' fetches of the same url (TTL re-crawl
     appends one row per re-fetch — plans/crawl.py recrawl_ttl).
     Latest round wins. Without this, the snippet join fans out
-    duplicate result rows and the dict build in search_rows picks an
-    arbitrary duplicate's snippet, so --serve and batch output
-    diverge on a TTL-crawled checkpoint (ADVICE r4 low #2). One
+    duplicate result rows and ServingIndex's per-url snippet dict
+    picks an arbitrary duplicate, so --serve and batch output diverge
+    on a TTL-crawled checkpoint (ADVICE r4 low #2). One
     map-side-combined groupBy at pages-log volume."""
     return pages_log.groupBy("url").agg(
         F.max_by("content", "round").alias("content")
@@ -193,17 +197,17 @@ class ServingIndex:
     DISTRIBUTED, so it holds at 100 TB where the reference's dict
     cannot.
 
-    Two structural latency cuts over search()/search_rows, both
-    measured by interleaved same-JVM A/B (BENCH/BASELINE.md, "Warm
-    search serving"):
+    Two structural latency cuts over ``search``, both measured by
+    interleaved same-JVM A/B (BENCH/BASELINE.md, "Warm search
+    serving"):
 
     * COVERING postings: ``(url, title)`` are denormalized into the
-      cached postings at load (one join, once), so the whole query
+      serving table at load (one join, once), so the whole query
       lifecycle — token filter, score sum, top-k, metadata — is ONE
       job with no broadcast sub-job and no second driver action:
       ``GROUP BY doc_id`` + ``any_value(url/title)`` (functionally
       dependent on doc_id) + ``LIMIT k``. Memory cost ~40 bytes/
-      posting; the plain non-covering tables remain the batch path.
+      posting.
     * ONE py4j call per query: the query is issued as a single
       ``spark.sql`` string against a uniquely-named temp view —
       building the same plan through the DataFrame API costs ~6
@@ -215,13 +219,10 @@ class ServingIndex:
     bit-for-bit to ``search`` by tests/e2e/test_crawl_chain.py for
     hit / fallback-hit / miss queries, with and without snippets.
 
-    Precondition of the covering form: every postings ``doc_id``
-    appears in ``docs`` (the inner join happens BEFORE scoring here,
-    AFTER it in ``search``). build_index/read_index pairs guarantee
-    this by construction — docs and postings come out of the same
-    build; for foreign inputs that violate it, use
-    ``covering=False``, which scores over raw postings exactly like
-    ``search`` does."""
+    Precondition: ``postings`` and ``docs`` come from one
+    build_index/read_index pair, so every postings ``doc_id`` appears
+    in ``docs`` — the docs join happens BEFORE scoring here and AFTER
+    it in ``search``, which only agree when no posting is orphaned."""
 
     def __init__(
         self,
@@ -229,9 +230,7 @@ class ServingIndex:
         docs: DataFrame,
         buckets: int | None = None,
         pages: DataFrame | None = None,
-        covering: bool = True,
         layout: str = "memory",
-        disk_dir: str | None = None,
     ):
         """``layout="memory"`` (default) persists the serving table in
         the Spark cache — fastest at small/mid index sizes, but
@@ -239,46 +238,31 @@ class ServingIndex:
         regardless of filter selectivity, so warm latency grows with
         per-bucket postings volume (measured: a zero-match token
         filter costs a full scan). ``layout="disk"`` writes the
-        serving table ONCE as token-sorted parquet partitioned by
-        token_bucket with 2 MB row groups: queries then prune to the
-        token buckets' directories AND row-group-skip on the token
-        min/max stats — measured p50 569 ms vs ~700 ms memory at
-        600k pages / 116M postings, and SUB-LINEAR in index size (4×
-        data → 2.1× latency) — the shape that holds at 100 TB, where
-        the serving tier reads bucket-pruned, stat-skipped
-        parquet/Iceberg partitions instead of caching the index
-        (BENCH/BASELINE.md §r5). Disk layout requires ``buckets``
-        (the written index's token_bucket column)."""
+        serving table ONCE to a fresh temp dir (removed by ``close``)
+        as token-sorted parquet partitioned by token_bucket with 2 MB
+        row groups: queries then prune to the token buckets'
+        directories AND row-group-skip on the token min/max stats —
+        measured p50 569 ms vs ~700 ms memory at 600k pages / 116M
+        postings, and SUB-LINEAR in index size (4× data → 2.1×
+        latency) — the shape that holds at 100 TB, where the serving
+        tier reads bucket-pruned, stat-skipped parquet/Iceberg
+        partitions instead of caching the index (BENCH/BASELINE.md
+        §r5). Disk layout requires ``buckets`` (the written index's
+        token_bucket column)."""
         import tempfile
         import uuid
 
-        self._spark = postings.sparkSession
-        self.buckets = buckets
-        uid = uuid.uuid4().hex[:12]
-        self._pview = f"serve_postings_{uid}"
-        self._dview: str | None = None
-        self._disk_dir: str | None = None
-        self._owns_disk_dir = layout == "disk" and disk_dir is None
         if layout not in ("memory", "disk"):
             raise ValueError(f"unknown ServingIndex layout {layout!r}")
         if layout == "disk" and buckets is None:
             raise ValueError("layout='disk' needs the index bucket count")
-        if covering:
-            serve = postings.join(
-                docs.select("doc_id", "url", "title"), "doc_id"
-            )
-        else:
-            serve = postings
-            self._dview = f"serve_docs_{uid}"
-            docs.select("doc_id", "url", "title").persist().createOrReplaceTempView(
-                self._dview
-            )
-            self._spark.table(self._dview).count()
-        self.covering = covering
+        self._spark = postings.sparkSession
+        self.buckets = buckets
+        self._pview = f"serve_postings_{uuid.uuid4().hex[:12]}"
+        self._disk_dir: str | None = None
+        serve = postings.join(docs.select("doc_id", "url", "title"), "doc_id")
         if layout == "disk":
-            self._disk_dir = disk_dir or tempfile.mkdtemp(
-                prefix="serve_idx_disk_"
-            )
+            self._disk_dir = tempfile.mkdtemp(prefix="serve_idx_disk_")
             (
                 serve.repartition(F.col("token_bucket"))
                 .sortWithinPartitions("token", "doc_id")
@@ -289,13 +273,11 @@ class ServingIndex:
             )
             serve = self._spark.read.parquet(self._disk_dir)
             serve.createOrReplaceTempView(self._pview)
-            self._serve = serve
         else:
             serve = serve.persist()
             serve.createOrReplaceTempView(self._pview)
             serve.count()  # materialize the resident cache now
-            self._serve = serve
-        self._layout = layout
+        self._serve = serve
         self._pages = None
         if pages is not None:
             self._pages = pages.persist()
@@ -316,23 +298,17 @@ class ServingIndex:
         # query() does the one double division driver-side — Python
         # float division IS IEEE double division, identical to topk's.
         msum = "sum(cast(round(score * 1000) AS bigint)) AS millis"
-        if self.covering:
-            return (
-                "SELECT doc_id, any_value(url) AS url, "
-                f"any_value(title) AS title, {msum} "
-                f"FROM {self._pview} WHERE {where} "
-                f"GROUP BY doc_id ORDER BY millis DESC, doc_id ASC LIMIT {k}"
-            )
         return (
-            f"SELECT doc_id, {msum} FROM {self._pview} "
-            f"WHERE {where} "
+            "SELECT doc_id, any_value(url) AS url, "
+            f"any_value(title) AS title, {msum} "
+            f"FROM {self._pview} WHERE {where} "
             f"GROUP BY doc_id ORDER BY millis DESC, doc_id ASC LIMIT {k}"
         )
 
     def query(self, query: str, k: int = 5) -> list[dict]:
         """≡ [r.asDict() for r in search(...).collect()] — one job
-        per query (covering), plus one snippet job when pages are
-        loaded, plus the fallback re-query on empty results
+        per query, plus one snippet job when pages are loaded, plus
+        the fallback re-query on empty results
         (start_search_engine.py:38-43)."""
         tokens = query_tokens(query)
         if not tokens:
@@ -343,35 +319,15 @@ class ServingIndex:
             rows = self._spark.sql(self._topk_sql(tokens, k)).collect()
         if not rows:
             return []
-        if not self.covering:
-            ids = ",".join(str(r["doc_id"]) for r in rows)
-            meta = {
-                m["doc_id"]: m
-                for m in self._spark.sql(
-                    f"SELECT doc_id, url, title FROM {self._dview} "
-                    f"WHERE doc_id IN ({ids})"
-                ).collect()
+        out = [
+            {
+                "doc_id": r["doc_id"],
+                "url": r["url"],
+                "title": r["title"],
+                "score": r["millis"] / 1000.0,
             }
-            out = [
-                {
-                    "doc_id": r["doc_id"],
-                    "url": meta[r["doc_id"]]["url"],
-                    "title": meta[r["doc_id"]]["title"],
-                    "score": r["millis"] / 1000.0,
-                }
-                for r in rows
-                if r["doc_id"] in meta
-            ]
-        else:
-            out = [
-                {
-                    "doc_id": r["doc_id"],
-                    "url": r["url"],
-                    "title": r["title"],
-                    "score": r["millis"] / 1000.0,
-                }
-                for r in rows
-            ]
+            for r in rows
+        ]
         if self._pages is not None:
             ctx_rows = (
                 self._pages.filter(
@@ -390,107 +346,14 @@ class ServingIndex:
         return out
 
     def close(self) -> None:
-        """Release resident state (cache blocks / spill files + temp
-        views)."""
-        if self._layout == "memory":
-            self._serve.unpersist()
-        elif self._disk_dir is not None and self._owns_disk_dir:
-            # only delete layouts THIS handle created; a caller-supplied
-            # disk_dir is caller-owned (it may be shared or reopened)
+        """Release resident state (cache blocks or the disk layout's
+        temp dir, temp view, pages cache)."""
+        if self._disk_dir is not None:
             import shutil
 
             shutil.rmtree(self._disk_dir, ignore_errors=True)
+        else:
+            self._serve.unpersist()
         self._spark.catalog.dropTempView(self._pview)
-        if self._dview is not None:
-            self._spark.table(self._dview).unpersist()
-            self._spark.catalog.dropTempView(self._dview)
         if self._pages is not None:
             self._pages.unpersist()
-
-
-def serving_table(docs: DataFrame, pages: DataFrame | None = None) -> DataFrame:
-    """Load-time prep for a RESIDENT serving process (search_job
-    --serve, bench serve_rehearsal): doc metadata — plus, when a
-    deduped ``(url, content)`` pages table is given, the page content
-    LEFT-joined in — as ONE table. Persist the result once; every
-    warm query against it is then a single fused job, snippets
-    included (r4 verdict item 3). The join runs once at load, at
-    docs-table volume; a doc with no pages row keeps a null content
-    → empty context downstream, matching ``search``."""
-    if pages is None:
-        return docs.select("doc_id", "url", "title")
-    return docs.join(pages, "url", "left").select(
-        "doc_id", "url", "title", "content"
-    )
-
-
-def search_rows(
-    postings: DataFrame,
-    docs: DataFrame,
-    query: str,
-    k: int = 5,
-    pages: DataFrame | None = None,
-    buckets: int | None = None,
-) -> list[dict]:
-    """Warm-serving twin of ``search`` (r3 verdict item 7): identical
-    results as plain dicts, optimized for a RESIDENT process answering
-    many queries over one loaded index (jobs/search_job.py --serve,
-    bench serve_rehearsal).
-
-    ``search`` pays per-query costs that only matter at point-query
-    latency: a createDataFrame round-trip plus a SECOND driver action
-    for the metadata join (and a third for snippets). Here the whole
-    lifecycle is ONE fused plan per query — the ≤k top-k subplan is
-    broadcast INTO the docs scan (Catalyst materializes the broadcast
-    and runs the pruned metadata join inside a single collect, with
-    no Python round-trip or fresh-plan analysis between them). When
-    ``docs`` carries a ``content`` column (pre-joined at load via
-    ``serving_table``), the C10 snippet is projected in the SAME job;
-    a separate ``pages`` table falls back to one extra snippet job.
-    Equivalence with ``search`` is pinned by tests/e2e (hit,
-    fallback-hit, miss, and TTL-duplicate cases)."""
-    tokens = query_tokens(query)
-    with_content = pages is None and "content" in docs.columns
-
-    def run(toks: list[str]) -> list:
-        hits = topk(postings, toks, k, buckets=buckets)
-        fused = docs.join(F.broadcast(hits), "doc_id")
-        cols = ["doc_id", "url", "title", "score"]
-        if with_content:
-            ctx = snippet_col(F.col("content"), toks).alias("context")
-            return fused.select(*cols, ctx).collect()
-        return fused.select(*cols).collect()
-
-    rows = run(tokens)
-    if not rows:
-        # Empty fused output is ambiguous: no hits (→ fallback
-        # re-query, start_search_engine.py:38-43) vs. hits whose
-        # doc_id is missing from docs (inner-join semantics — then
-        # ``search`` returns empty WITHOUT falling back). Disambiguate
-        # with a 1-row probe; the extra job only runs on misses.
-        if not topk(postings, tokens, k, buckets=buckets).limit(1).collect():
-            tokens = fallback_tokens(query)
-            rows = run(tokens)
-    out = [
-        {
-            "doc_id": r["doc_id"],
-            "url": r["url"],
-            "title": r["title"],
-            "score": r["score"],
-            **({"context": r["context"]} if with_content else {}),
-        }
-        for r in rows
-    ]
-    if pages is not None:
-        ctx_rows = (
-            pages.filter(F.col("url").isin([o["url"] for o in out]))
-            .select(
-                "url", snippet_col(F.col("content"), tokens).alias("context")
-            )
-            .collect()
-        )
-        ctx = {r["url"]: r["context"] for r in ctx_rows}
-        for o in out:
-            o["context"] = ctx.get(o["url"], "")
-    out.sort(key=lambda o: (-o["score"], o["doc_id"]))
-    return out
