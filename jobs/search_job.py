@@ -38,11 +38,13 @@ def main() -> None:
     ap.add_argument(
         "--serve",
         action="store_true",
-        help="resident serving mode: materialize the covering "
-        "ServingIndex once (plans/search.ServingIndex — one job per "
-        "warm query), answer queries from it, and report per-query "
-        "latency_ms in each JSON line — the analog of the reference's "
-        "long-lived search process (start_search_engine.py:14-27)",
+        help="resident serving mode: answer queries from a "
+        "ServingIndex (plans/search.ServingIndex — each token bucket's "
+        "postings load into driver memory on first use; a warm query "
+        "runs no Spark job, plus one snippet job with --pages) and "
+        "report per-query latency_ms in each JSON line — the analog of "
+        "the reference's long-lived search process "
+        "(start_search_engine.py:14-27)",
     )
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
@@ -71,15 +73,9 @@ def main() -> None:
     if args.serve:
         import time
 
-        # resident state (plans/search.ServingIndex): the COVERING
-        # postings cache — (url, title) denormalized in at load — is
-        # materialized once; every warm query after this is a single
-        # job (plus one snippet job when --pages is given)
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(spark.sparkContext.defaultParallelism // 4, 2)),
-        )
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        # resident state (plans/search.ServingIndex): docs collected
+        # once, a token bucket's postings on its first query; the bucket
+        # loads and the snippet filter are narrow scans (no shuffle)
         idx = ServingIndex(postings, docs, buckets=buckets, pages=pages)
         queries = args.query or (q.strip() for q in sys.stdin)
         for q in queries:

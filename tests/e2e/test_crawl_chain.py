@@ -167,7 +167,7 @@ def test_search_over_crawled_index_with_snippets(crawl_index, job, world, oracle
 
 
 def test_serving_index_identical(crawl_index, job):
-    """plans/search.ServingIndex (the resident covering-cache serving
+    """plans/search.ServingIndex (the resident in-process serving
     handle behind --serve and serve_rehearsal) must return exactly
     search()'s rows for hit, fallback-hit, and miss queries — both
     with separate pages (snippets) and bare (metadata only)."""

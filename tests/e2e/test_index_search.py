@@ -1,8 +1,6 @@
 """Index + search e2e parity: Spark job vs the pure-Python oracle
 (SURVEY §5.3 rows 'dedup parity' and 'index/search e2e')."""
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -242,15 +240,19 @@ def test_written_index_partition_pruned_search(
         assert "PartitionFilters" in plan and "token_bucket" in plan, plan
 
 
-def test_serving_index_disk_layout_identical(
+def test_serving_index_bucketed_identical(
     spark, engine_index, tmp_path_factory
 ):
-    """r5: ServingIndex(layout="disk") — the covering serving table
-    written once as token-sorted, bucket-partitioned parquet (the
-    at-scale serving shape, BENCH/BASELINE.md §r5) — must answer
-    every query identically to the memory-cached layout and to the
-    batch search() plan. Also pins the constructor's input checks and
-    that close() removes the disk layout's temp dir and temp view."""
+    """ServingIndex over the 8-bucket written index answers every
+    query exactly like the batch search() plan — "harbor harbor"
+    included, whose repeated token must count each posting once, as
+    Spark's IN does. Once a pass has loaded the query buckets, a second
+    pass runs no Spark job; 4 threads querying a fresh index from cold
+    (concurrent first-touch bucket loads) get the sequential answers."""
+    import sys
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
     from web_crawler_search_engine_spark.plans.indexer import (
         read_index,
         write_index,
@@ -260,27 +262,50 @@ def test_serving_index_disk_layout_identical(
     path = str(tmp_path_factory.mktemp("idx_serve"))
     write_index(docs_df, postings_df, path, buckets=8)
     postings2, docs2, buckets = read_index(spark, path)
-    with pytest.raises(ValueError, match="layout"):
-        S.ServingIndex(postings2, docs2, buckets=buckets, layout="bogus")
-    with pytest.raises(ValueError, match="bucket count"):
-        S.ServingIndex(postings2, docs2, layout="disk")
-    mem = S.ServingIndex(postings2, docs2, buckets=buckets)
-    disk = S.ServingIndex(postings2, docs2, buckets=buckets, layout="disk")
-    disk_path, disk_view = disk._disk_dir, disk._pview
-    assert os.path.isdir(disk_path) and spark.catalog.tableExists(disk_view)
+    queries = QUERIES + ["harbor harbor", "zzznotaword"]
+    want = {
+        q: [
+            r.asDict()
+            for r in S.search(postings2, docs2, q, buckets=buckets).collect()
+        ]
+        for q in queries
+    }
+    assert want["harbor harbor"], "the repeated-token query must hit"
+    idx = S.ServingIndex(postings2, docs2, buckets=buckets)
+    fresh = S.ServingIndex(postings2, docs2, buckets=buckets)
+    sc = spark.sparkContext
     try:
-        for q in ["granite harbor", "lantern", "apple bridge circuit dawn",
-                  "zzznotaword"]:
-            want = [
-                r.asDict()
-                for r in S.search(
-                    postings2, docs2, q, buckets=buckets
-                ).collect()
-            ]
-            assert mem.query(q) == want, ("memory", q)
-            assert disk.query(q) == want, ("disk", q)
+        for q in queries:
+            assert idx.query(q) == want[q], q
+        sc.setJobGroup("serving-warm", "warm ServingIndex pass")
+        for q in queries:
+            assert idx.query(q) == want[q], ("warm", q)
+        # the status tracker fills asynchronously but in job order: once
+        # a later fence job is visible, any warm-pass job would be too
+        sc.setJobGroup("serving-fence", "status tracker fence")
+        spark.range(1).count()
+        deadline = time.monotonic() + 30
+        while not sc.statusTracker().getJobIdsForGroup("serving-fence"):
+            assert time.monotonic() < deadline, "fence job never listed"
+            time.sleep(0.05)
+        assert sc.statusTracker().getJobIdsForGroup("serving-warm") == []
+
+        def client(i):
+            return [(q, fresh.query(q)) for q in queries[i:] + queries[:i]]
+
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)  # interleave the threads' loads
+        try:
+            with ThreadPoolExecutor(4) as ex:
+                futures = [ex.submit(client, i) for i in range(4)]
+                got = [a for f in futures for a in f.result(timeout=600)]
+        finally:
+            sys.setswitchinterval(switch)
+        assert len(got) == 4 * len(queries)
+        for q, rows in got:
+            assert rows == want[q], ("threaded", q)
     finally:
-        mem.close()
-        disk.close()
-    assert not os.path.exists(disk_path)
-    assert not spark.catalog.tableExists(disk_view)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        idx.close()
+        fresh.close()

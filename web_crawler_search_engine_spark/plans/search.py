@@ -14,15 +14,22 @@ DataFrame per query).
 
 Two serving paths, pinned to each other row-for-row: ``search`` (the
 batch/reference plan above) and ``ServingIndex`` (the resident warm
-handle behind ``search_job --serve``)."""
+handle behind ``search_job --serve``), which loads each token bucket's
+postings into driver-side numpy arrays on first use and then answers
+with no Spark job."""
 
 from __future__ import annotations
 
 import re
+import threading
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import xxh64_str
 from ..functions.stemming import stem
 
 _WORD_RE = re.compile(r"\b[a-zA-Z0-9]+\b")
@@ -61,8 +68,6 @@ def token_buckets(tokens: list[str], buckets: int) -> list[int]:
     Column expression write_index partitioned by (hashing.xxh64_str
     pins Spark's seed-42/UTF-8 semantics), so the bucket set derives
     from the query string alone, with no lookup job."""
-    from ..functions.hashing import xxh64_str
-
     return sorted({xxh64_str(t) % buckets for t in tokens})
 
 
@@ -189,40 +194,40 @@ def search(
 
 
 class ServingIndex:
-    """Resident warm-serving handle (r4 verdict item 3): load-time
-    layout + per-query path tuned for a long-lived search process
-    (jobs/search_job.py --serve, bench serve_rehearsal), the analog
-    of the reference's in-heap serving loop
-    (start_search_engine.py:14-27) — except the index stays
-    DISTRIBUTED, so it holds at 100 TB where the reference's dict
-    cannot.
+    """Resident warm-serving handle behind ``search_job --serve``,
+    ``bench serve_rehearsal`` and the ``index_serve`` benchmark: the
+    analog of the reference's in-process serving loop
+    (start_search_engine.py:14-27). Spark builds and writes the
+    token-bucketed index; this handle answers from numpy arrays in
+    the driver, so a warm query runs no Spark job.
 
-    Two structural latency cuts over ``search``, both measured by
-    interleaved same-JVM A/B (BENCH/BASELINE.md, "Warm search
-    serving"):
+    * Load. ``docs`` ``(doc_id, url, title)`` is collected once at
+      construction, sorted by doc_id. A token bucket's postings are
+      read on its first use by one Spark job — a ``token_bucket = b``
+      partition-pruned scan of write_index's output, the analog of
+      the reference's index_of_index seek (with ``buckets=None`` the
+      whole table is one bucket). The load runs under a lock, so
+      concurrent clients load each bucket once.
+    * Resident memory: per loaded posting a doc-row int32 and a
+      score-millis int64 (12 bytes), plus one ``token -> (start,
+      end)`` entry per distinct token; no Python object per posting.
+      A query allocates 9 bytes of scratch per doc.
+    * Query: de-duplicated query tokens (Spark's ``IN`` counts each
+      posting once) add their posting ranges into a per-doc int64
+      millis sum, ranked by ``(millis desc, doc_id asc)`` — the
+      fixed-point contract of ``topk`` — and the stemmed fallback runs
+      on an empty result. With ``pages`` the ≤ k snippets still take
+      one Spark job per query (``snippet_col`` pins Java regex and
+      UTF-16 substring semantics).
 
-    * COVERING postings: ``(url, title)`` are denormalized into the
-      serving table at load (one join, once), so the whole query
-      lifecycle — token filter, score sum, top-k, metadata — is ONE
-      job with no broadcast sub-job and no second driver action:
-      ``GROUP BY doc_id`` + ``any_value(url/title)`` (functionally
-      dependent on doc_id) + ``LIMIT k``. Memory cost ~40 bytes/
-      posting.
-    * ONE py4j call per query: the query is issued as a single
-      ``spark.sql`` string against a uniquely-named temp view —
-      building the same plan through the DataFrame API costs ~6
-      driver round-trips (~50 ms on a slow host) before Catalyst
-      even starts.
-
-    Tokens are alnum-only by construction (_WORD_RE) and quoted
-    defensively, so literal inlining is safe. Results are pinned
-    bit-for-bit to ``search`` by tests/e2e/test_crawl_chain.py for
-    hit / fallback-hit / miss queries, with and without snippets.
+    Rows are pinned to ``search``'s ``Row.asDict()`` by
+    tests/e2e/test_crawl_chain.py and tests/e2e/test_index_search.py
+    for hit / fallback-hit / miss queries, with and without snippets.
 
     Precondition: ``postings`` and ``docs`` come from one
-    build_index/read_index pair, so every postings ``doc_id`` appears
-    in ``docs`` — the docs join happens BEFORE scoring here and AFTER
-    it in ``search``, which only agree when no posting is orphaned."""
+    build_index/read_index pair. Postings whose doc_id is not in
+    ``docs`` are dropped at load (``search`` would drop them only
+    after its top-k)."""
 
     def __init__(
         self,
@@ -230,105 +235,102 @@ class ServingIndex:
         docs: DataFrame,
         buckets: int | None = None,
         pages: DataFrame | None = None,
-        layout: str = "memory",
     ):
-        """``layout="memory"`` (default) persists the serving table in
-        the Spark cache — fastest at small/mid index sizes, but
-        InMemoryTableScan launches a task per cache partition
-        regardless of filter selectivity, so warm latency grows with
-        per-bucket postings volume (measured: a zero-match token
-        filter costs a full scan). ``layout="disk"`` writes the
-        serving table ONCE to a fresh temp dir (removed by ``close``)
-        as token-sorted parquet partitioned by token_bucket with 2 MB
-        row groups: queries then prune to the token buckets'
-        directories AND row-group-skip on the token min/max stats —
-        measured p50 569 ms vs ~700 ms memory at 600k pages / 116M
-        postings, and SUB-LINEAR in index size (4× data → 2.1×
-        latency) — the shape that holds at 100 TB, where the serving
-        tier reads bucket-pruned, stat-skipped parquet/Iceberg
-        partitions instead of caching the index (BENCH/BASELINE.md
-        §r5). Disk layout requires ``buckets`` (the written index's
-        token_bucket column)."""
-        import tempfile
-        import uuid
-
-        if layout not in ("memory", "disk"):
-            raise ValueError(f"unknown ServingIndex layout {layout!r}")
-        if layout == "disk" and buckets is None:
-            raise ValueError("layout='disk' needs the index bucket count")
-        self._spark = postings.sparkSession
+        """``buckets``: the written index's token_bucket count
+        (read_index's third value); ``None`` for an unbucketed
+        postings DataFrame."""
+        self._postings = postings
         self.buckets = buckets
-        self._pview = f"serve_postings_{uuid.uuid4().hex[:12]}"
-        self._disk_dir: str | None = None
-        serve = postings.join(docs.select("doc_id", "url", "title"), "doc_id")
-        if layout == "disk":
-            self._disk_dir = tempfile.mkdtemp(prefix="serve_idx_disk_")
-            (
-                serve.repartition(F.col("token_bucket"))
-                .sortWithinPartitions("token", "doc_id")
-                .write.mode("overwrite")
-                .option("parquet.block.size", 2 * 1024 * 1024)
-                .partitionBy("token_bucket")
-                .parquet(self._disk_dir)
-            )
-            serve = self._spark.read.parquet(self._disk_dir)
-            serve.createOrReplaceTempView(self._pview)
-        else:
-            serve = serve.persist()
-            serve.createOrReplaceTempView(self._pview)
-            serve.count()  # materialize the resident cache now
-        self._serve = serve
+        d = docs.select("doc_id", "url", "title").toArrow().sort_by("doc_id")
+        self._doc_ids = d.column("doc_id").to_numpy()
+        self._urls = d.column("url").to_pylist()
+        self._titles = d.column("title").to_pylist()
+        self._loaded: dict[int | None, tuple] = {}
+        self._lock = threading.Lock()
         self._pages = None
         if pages is not None:
             self._pages = pages.persist()
             self._pages.count()
 
-    def _topk_sql(self, tokens: list[str], k: int) -> str:
-        esc = [t.replace("'", "''") for t in tokens]
-        tl = ",".join(f"'{t}'" for t in esc)
-        where = f"token IN ({tl})"
-        if self.buckets is not None:
-            bl = ",".join(str(b) for b in token_buckets(tokens, self.buckets))
-            where = f"token_bucket IN ({bl}) AND {where}"
-        # fixed-point millis sum — exact + associative, so the ranking
-        # is layout-independent and bit-equal to topk() (see there).
-        # The sum stays a BIGINT named millis through the SQL (SQL-side
-        # `/1000.0` would go decimal, and re-stating the sum expression
-        # in ORDER BY re-resolves `score` against the output alias);
-        # query() does the one double division driver-side — Python
-        # float division IS IEEE double division, identical to topk's.
-        msum = "sum(cast(round(score * 1000) AS bigint)) AS millis"
-        return (
-            "SELECT doc_id, any_value(url) AS url, "
-            f"any_value(title) AS title, {msum} "
-            f"FROM {self._pview} WHERE {where} "
-            f"GROUP BY doc_id ORDER BY millis DESC, doc_id ASC LIMIT {k}"
-        )
+    def _bucket(self, b: int | None) -> tuple:
+        """(token -> (start, end), doc rows, millis) of bucket ``b``,
+        loaded by one Spark job on first use."""
+        got = self._loaded.get(b)
+        if got is not None:
+            return got
+        with self._lock:
+            if b in self._loaded:
+                return self._loaded[b]
+            p = self._postings
+            if b is not None:
+                p = p.filter(F.col("token_bucket") == b)
+            # rounding in Spark keeps topk()'s round-half-up semantics
+            t = p.select(
+                "token",
+                "doc_id",
+                F.round(F.col("score") * 1000).cast("long").alias("millis"),
+            ).toArrow()
+            # docs are doc_id-sorted, so a doc's index there is its row;
+            # postings of unknown docs get a null row and are dropped
+            row = pc.index_in(t.column("doc_id"), value_set=pa.array(self._doc_ids))
+            t = (
+                t.append_column("row", row)
+                .filter(pc.is_valid(row))
+                .sort_by("token")
+            )
+            runs = pc.run_end_encode(t.column("token").combine_chunks())
+            ends = runs.run_ends.to_numpy().tolist()
+            spans = dict(zip(runs.values.to_pylist(), zip([0] + ends, ends)))
+            got = (
+                spans,
+                t.column("row").to_numpy(),
+                t.column("millis").to_numpy(),
+            )
+            self._loaded[b] = got
+        return got
+
+    def _topk(self, tokens: list[str], k: int) -> list[tuple[int, int]]:
+        """[(doc row, millis)] — topk()'s ranking, in-process: an exact
+        int64 millis sum per doc over the distinct tokens' postings."""
+        acc = np.zeros(len(self._doc_ids), np.int64)
+        hit = np.zeros(len(self._doc_ids), bool)
+        for t in dict.fromkeys(tokens):
+            b = None if self.buckets is None else xxh64_str(t) % self.buckets
+            spans, rows, millis = self._bucket(b)
+            if t in spans:
+                lo, hi = spans[t]
+                np.add.at(acc, rows[lo:hi], millis[lo:hi])
+                hit[rows[lo:hi]] = True
+        r = np.flatnonzero(hit)
+        s = acc[r]
+        if len(s) > k:
+            cut = np.partition(s, len(s) - k)[len(s) - k]
+            r, s = r[s >= cut], s[s >= cut]
+        # doc rows are doc_id-sorted, so row order is doc_id order
+        top = np.lexsort((r, -s))[:k]
+        return list(zip(r[top].tolist(), s[top].tolist()))
 
     def query(self, query: str, k: int = 5) -> list[dict]:
-        """≡ [r.asDict() for r in search(...).collect()] — one job
-        per query, plus one snippet job when pages are loaded, plus
+        """≡ [r.asDict() for r in search(...).collect()], including
         the fallback re-query on empty results
-        (start_search_engine.py:38-43)."""
+        (start_search_engine.py:38-43). No Spark job once the query's
+        token buckets are loaded, except the snippet job when pages
+        are loaded."""
         tokens = query_tokens(query)
-        if not tokens:
-            return []
-        rows = self._spark.sql(self._topk_sql(tokens, k)).collect()
-        if not rows:
+        hits = self._topk(tokens, k)
+        if not hits:
             tokens = fallback_tokens(query)
-            rows = self._spark.sql(self._topk_sql(tokens, k)).collect()
-        if not rows:
-            return []
+            hits = self._topk(tokens, k)
         out = [
             {
-                "doc_id": r["doc_id"],
-                "url": r["url"],
-                "title": r["title"],
-                "score": r["millis"] / 1000.0,
+                "doc_id": int(self._doc_ids[r]),
+                "url": self._urls[r],
+                "title": self._titles[r],
+                "score": m / 1000.0,
             }
-            for r in rows
+            for r, m in hits
         ]
-        if self._pages is not None:
+        if out and self._pages is not None:
             ctx_rows = (
                 self._pages.filter(
                     F.col("url").isin([o["url"] for o in out])
@@ -342,18 +344,10 @@ class ServingIndex:
             ctx = {r["url"]: r["context"] for r in ctx_rows}
             for o in out:
                 o["context"] = ctx.get(o["url"], "")
-        out.sort(key=lambda o: (-o["score"], o["doc_id"]))
         return out
 
     def close(self) -> None:
-        """Release resident state (cache blocks or the disk layout's
-        temp dir, temp view, pages cache)."""
-        if self._disk_dir is not None:
-            import shutil
-
-            shutil.rmtree(self._disk_dir, ignore_errors=True)
-        else:
-            self._serve.unpersist()
-        self._spark.catalog.dropTempView(self._pview)
+        """Release resident state (loaded buckets, pages cache)."""
+        self._loaded.clear()
         if self._pages is not None:
             self._pages.unpersist()
